@@ -448,20 +448,9 @@ def _run_load(spark, args) -> None:
         if len(invalid_pdf)
         else None,
     )
-    # DuckDB's ON CONFLICT needs a real unique index; the PK was stripped
-    # above, so emulate the upsert with delete+insert inside the txn
-    if spec.invalid_staging:
-        con.execute(
-            "DELETE FROM client_report_invalid t WHERE EXISTS ("
-            "SELECT 1 FROM client_report_invalid_staging s "
-            "WHERE s.datetime = t.datetime AND s.source_file = t.source_file)"
-        )
-        con.execute(
-            "INSERT INTO client_report_invalid SELECT * FROM client_report_invalid_staging"
-        )
-        spec = MergeSpec(
-            target=spec.target, archive=spec.archive, staging=spec.staging
-        )
+    # the dead-letter upsert runs inside the merge transaction (only
+    # client_report's PK is stripped above; client_report_invalid keeps the
+    # (datetime, source_file) key its ON CONFLICT needs)
     execute_merge(con, spec)
     summary = W.verify_load(con)
     summary = {k: str(v) for k, v in summary.items()}

@@ -39,14 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_project_spark.operators.clustering import (
-    _assign,
     _lloyd,
     _lloyd_books_multi,
     pq_codes_arrow,
     quantize_vec,
 )
 from data_engineering_project_spark.operators.similarity import (
-    score_cosine_vectorized,
+    score_cosine_pairs_vectorized,
 )
 from data_engineering_project_spark.sinks import snapshot_table as snap
 
@@ -124,7 +123,8 @@ def query_ivf_index(
 
     Cell ranking happens driver-side over the k stored centroids (same L2
     metric the build's Lloyd assignment used, quantized units on both
-    sides); ties break toward the smaller cell id, mirroring ``_assign``.
+    sides); ties break toward the smaller cell id, mirroring the build's
+    (d, cid) argmin.
     ``tag`` resolves a :func:`promote_index` pin — serving reads keep
     answering from the pinned generation while a rebuild commits."""
     centroids = _load_centroids(spark, table, tag)
@@ -149,7 +149,7 @@ def query_ivf_index(
     for p in parts[1:]:
         cells = cells.unionByName(p)
     with_q = cells.withColumn("qe", F.array(*[F.lit(v) for v in qq]))
-    scored = score_cosine_vectorized(
+    scored = score_cosine_pairs_vectorized(
         with_q, vec_col="q", query_vec_col="qe", keep_cols=("vec_id", "cell")
     )
     return (
@@ -168,16 +168,27 @@ def append_to_ivf_index(
     scale: int = 1000,
 ) -> None:
     """Absorb new vectors without a refit: assign against the stored
-    centroids, merge by id (redelivery replaces, never duplicates)."""
+    centroids with the build's own final-assignment kernel, merge by id
+    (redelivery replaces, never duplicates)."""
     spark = emb_new.sparkSession
     centroids = _load_centroids(spark, table)
+    if not centroids:
+        raise FileNotFoundError(
+            f"no IVF centroid state under {_centroid_table(table)!r} — "
+            "build_ivf_index must run before appends"
+        )
     pts = emb_new.select(
         F.col(id_col).alias("vec_id"),
         quantize_vec(F.col(vec_col), scale).alias("q"),
     )
-    updates = _assign(pts, centroids).select(
-        "vec_id", F.col("cluster").alias("cell"), "q"
-    )
+    updates = pq_codes_arrow(
+        pts,
+        books=[centroids],
+        sub=len(next(iter(centroids.values()))),
+        vec_col="q",
+        strict_len=True,
+        keep_vec=True,
+    ).select("vec_id", F.col("c0").alias("cell"), "q")
     snap.merge_upsert(spark, table, updates, ["vec_id"], stats_cols=["cell"])
 
 
@@ -265,7 +276,7 @@ def ivf_index_recall(
         )
         exact = {
             r["vec_id"]
-            for r in score_cosine_vectorized(
+            for r in score_cosine_pairs_vectorized(
                 full, vec_col="q", query_vec_col="qe", keep_cols=("vec_id",)
             )
             .orderBy(F.desc("cosine"), F.asc("vec_id"))

@@ -30,6 +30,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from data_engineering_project_spark.operators.kernels import (
+    kernel_columns,
+    kernel_input,
+    left_fold,
+    split_rows,
+)
+
 
 def quantize_vec(vec: Column, scale: int) -> Column:
     """float array → integer-unit BIGINT array (exact, order-safe sums)."""
@@ -53,8 +60,8 @@ def _dist2(q: Column, centroid: list[float]) -> Column:
 def _pq_code(vec: Column, s: int, sub: int, book: dict[int, list[float]]) -> Column:
     """PQ code of subspace ``s`` as a LITERAL projection (no join against an
     assignment frame): argmin over the codebook with the (dist, cid)
-    lexicographic tie-break — identical to ``_assign`` because Lloyd's final
-    step IS assignment with the final centroids."""
+    lexicographic tie-break — Lloyd's final step IS assignment with the
+    final centroids."""
     scored = F.array(
         *[
             F.struct(
@@ -72,12 +79,11 @@ def _make_codes_matrix(
 ):
     """Build the per-batch PQ-codes closure — the vectorized replica of
     ``n_sub`` ``_pq_code`` projections (bit-identical: the per-pair
-    distance accumulates ``acc += (x_i - b_i)²`` dimension-by-dimension
-    from 0.0, the strict left fold the zip_with+aggregate expression
-    evaluates, on exact int64→double values; ``np.argmin`` takes the first
-    minimum over codebooks stacked in ascending-cid order = the (d, cid)
-    lexicographic tie-break; NaN cannot arise from integer inputs and
-    finite codebooks).
+    distance is the ``left_fold`` of ``(x_i - b_i)²`` in dimension order,
+    the strict left fold the zip_with+aggregate expression evaluates, on
+    exact int64→double values; ``np.argmin`` takes the first minimum over
+    codebooks stacked in ascending-cid order = the (d, cid) lexicographic
+    tie-break; NaN cannot arise from integer inputs and finite codebooks).
 
     Malformed-row semantics, empirically pinned against the expression
     form (ANSI session; tests/test_timeseries_clustering.py): a NULL
@@ -86,19 +92,16 @@ def _make_codes_matrix(
     NULL-``d`` structs FIRST — the code degrades to the smallest cid; a
     fully-present window (even on an over-long row) computes normally.
 
-    ``strict_len=True`` selects the ``_assign`` (whole-vector k-means)
-    hostile contract instead: the fold there zips the FULL vector against
-    a dim-length centroid, so an over-long row ALSO nulls every distance
-    (the centroid side pads) and degrades to the smallest cid — probed
-    empirically; PQ's ``slice`` semantics compute over-long rows normally.
+    ``strict_len=True`` selects the whole-vector k-means contract instead
+    (one book, ``sub`` = dim): the ``_dist2`` fold there zips the FULL
+    vector against a dim-length centroid, so an over-long row ALSO nulls
+    every distance (the centroid side pads) and degrades to the smallest
+    cid; PQ's ``slice`` semantics compute over-long rows normally.
 
-    Returned as a FACTORY so the worker-side closure is pickled by value
-    (a module-level helper would pickle by reference and fail to import
-    on executors that don't share the driver's sys.path).
-
-    The closure maps ``(vec: pa.ListArray, hn: np.ndarray)`` to
-    ``(codes (m, n_sub) int64, fast mask, fast_idx, Xi)`` where ``Xi`` is
-    the (n_fast, dim) int64 matrix of well-formed rows (reused by the
+    Returned as a FACTORY so the worker-side closure carries its codebooks
+    by value. The closure maps ``(vec: pa.ListArray, hn: np.ndarray)`` to
+    ``(codes (m, n_sub) int64, fast mask, Xi)`` where ``Xi`` is the
+    (n_fast, dim) int64 matrix of well-formed rows (reused by the
     training-stats kernel for exact integer sums).
     """
     n_sub = len(books)
@@ -132,46 +135,28 @@ def _make_codes_matrix(
 
     def codes_matrix(vec, hn):
         import numpy as np
-        import pyarrow as pa
 
-        m = len(vec)
-        valid = vec.is_valid().to_numpy(zero_copy_only=False).astype(bool)
-        lens_f = vec.value_lengths().to_numpy(zero_copy_only=False)
-        lens = np.where(valid, np.nan_to_num(lens_f, nan=-1.0), -1.0).astype(
-            np.int64
-        )
-        fast = valid & ~hn & (lens == dim)
-        codes = np.zeros((m, n_sub), dtype=np.int64)
-        fast_idx = np.flatnonzero(fast)
-        Xi = None
-        if len(fast_idx):
-            k = len(fast_idx)
-            Xi = (
-                vec.take(pa.array(fast_idx))
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-                .reshape(k, dim)
-            )
+        fast, Xi, _ = split_rows(vec, dim, hn, dtype=np.int64)
+        codes = np.zeros((len(vec), n_sub), dtype=np.int64)
+        k = len(Xi)
+        if k:
             Xf = Xi.astype(np.float64)
             for s in range(n_sub):
                 W = Xf[:, s * sub : (s + 1) * sub]
                 D = np.empty((k, len(keys[s])), dtype=np.float64)
                 for ci, cid in enumerate(keys[s]):
                     b = books[s][cid]
-                    acc = np.zeros(k, dtype=np.float64)
-                    for i in range(sub):
-                        d = W[:, i] - b[i]
-                        acc += d * d
-                    D[:, ci] = acc
-                codes[fast_idx, s] = np.asarray(keys[s], dtype=np.int64)[
+                    D[:, ci] = left_fold(
+                        (np.square(W[:, i] - b[i]) for i in range(sub)), k
+                    )
+                codes[fast, s] = np.asarray(keys[s], dtype=np.int64)[
                     np.argmin(D, axis=1)
                 ]
         for r in np.flatnonzero(~fast):
-            vals = vec[int(r)].as_py() if valid[r] else None
+            vals = vec[int(r)].as_py()
             for s in range(n_sub):
                 codes[r, s] = slow_code(vals, s)
-        return codes, fast, fast_idx, Xi
+        return codes, fast, Xi
 
     return codes_matrix
 
@@ -191,11 +176,10 @@ def pq_codes_arrow(
     almost entirely there, tools/ab_ivfpq_stages.py). Passes every other
     column of ``frame`` through untouched and appends ``c0..c{n_sub-1}``
     (int, same values as the expression form — semantics pinned in
-    :func:`_codes_matrix` / :func:`_slow_pq_code`). Plan shape: a single
-    ``MapInArrow`` over whatever partitioning the input already has — no
-    shuffle, no BatchEvalPython."""
-    import pyarrow as pa  # driver-side import check  # noqa: F401
-
+    :func:`_make_codes_matrix`). ``strict_len=True`` with one whole-vector
+    book is the k-means cell assignment (``_dist2`` argmin). Plan shape: a
+    single ``MapInArrow`` over whatever partitioning the input already has
+    — no shuffle, no BatchEvalPython."""
     n_sub = len(books)
     keep = [c for c in frame.columns if c != vec_col]
     schema_fields = [
@@ -209,13 +193,7 @@ def pq_codes_arrow(
     out_schema = ", ".join(
         schema_fields + [f"c{s} int" for s in range(n_sub)]
     )
-    src = frame.select(
-        *keep,
-        F.col(vec_col).alias("_v"),
-        F.coalesce(
-            F.exists(F.col(vec_col), lambda x: x.isNull()), F.lit(False)
-        ).alias("_hn"),
-    )
+    src = kernel_input(frame, vec_col, *keep)
     out_names = keep + ([vec_col] if keep_vec else []) + [
         f"c{s}" for s in range(n_sub)
     ]
@@ -226,16 +204,9 @@ def pq_codes_arrow(
         import pyarrow as pa
 
         for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            vec = tbl.column("_v").combine_chunks()
-            hn = (
-                tbl.column("_hn")
-                .combine_chunks()
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
-            )
-            codes, _, _, _ = codes_matrix(vec, hn)
-            cols = [tbl.column(c).combine_chunks() for c in keep]
+            vec, hn = kernel_columns(rb)
+            codes, _, _ = codes_matrix(vec, hn)
+            cols = [rb.column(c) for c in keep]
             if keep_vec:
                 cols.append(vec)
             cols += [
@@ -260,29 +231,22 @@ def _lloyd_stats_arrow(
     groupBy sum/count), whose interpreted argmin HOFs and 64× row explode
     were the training round's entire 1.6 s (tools/ab_ivfpq_stages.py).
 
-    Exactness: codes are bit-identical (:func:`_codes_matrix`); per-group
-    sums are int64 over int64 (order-free); count parity includes NULL
-    elements exactly as ``count(lit(1))`` over the explode did, and ``sm``
-    stays NULL for a group whose every element was NULL (slow rows only).
-    A malformed row LONGER than dim raises, reproducing the expression
-    form's ANSI ``element_at(_cls, s+1)`` out-of-bounds error on its
-    phantom trailing dims.
+    Exactness: codes are bit-identical (:func:`_make_codes_matrix`);
+    per-group sums are int64 over int64 (order-free); count parity
+    includes NULL elements exactly as ``count(lit(1))`` over the explode
+    did, and ``sm`` stays NULL for a group whose every element was NULL
+    (slow rows only). A malformed row LONGER than dim raises, reproducing
+    the expression form's ANSI ``element_at(_cls, s+1)`` out-of-bounds
+    error on its phantom trailing dims.
 
     Returns the collected (s, cluster, d, sm, n) rows, same contract as
     the old ``.collect()``.
     """
-    import pyarrow as pa  # driver-side import check  # noqa: F401
-
     n_sub = len(books)
     dim = n_sub * sub
     kmax = max(len(b) for b in books)
     keys = [sorted(b) for b in books]
-    src = frame.select(
-        F.col(vec_col).alias("_v"),
-        F.coalesce(
-            F.exists(F.col(vec_col), lambda x: x.isNull()), F.lit(False)
-        ).alias("_hn"),
-    )
+    src = kernel_input(frame, vec_col)
 
     codes_matrix = _make_codes_matrix(books, sub, strict_len)
 
@@ -295,32 +259,21 @@ def _lloyd_stats_arrow(
         # (s, cluster, d) -> [sm, n, seen_nonnull] for slow-row elements
         slow: dict = {}
         for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            vec = tbl.column("_v").combine_chunks()
-            hn = (
-                tbl.column("_hn")
-                .combine_chunks()
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
-            )
-            codes, fast, fast_idx, Xi = codes_matrix(vec, hn)
-            if Xi is not None:
-                fast_codes = codes[fast_idx]
-                for s in range(n_sub):
-                    W = Xi[:, s * sub : (s + 1) * sub]
-                    for ci, cid in enumerate(keys[s]):
-                        mask = fast_codes[:, s] == cid
-                        cnt = int(mask.sum())
-                        if cnt:
-                            SM[s, ci] += W[mask].sum(axis=0)
-                            N[s, ci] += cnt
-            valid = vec.is_valid().to_numpy(zero_copy_only=False).astype(
-                bool
-            )
+            vec, hn = kernel_columns(rb)
+            codes, fast, Xi = codes_matrix(vec, hn)
+            fast_codes = codes[fast]
+            for s in range(n_sub):
+                W = Xi[:, s * sub : (s + 1) * sub]
+                for ci, cid in enumerate(keys[s]):
+                    mask = fast_codes[:, s] == cid
+                    cnt = int(mask.sum())
+                    if cnt:
+                        SM[s, ci] += W[mask].sum(axis=0)
+                        N[s, ci] += cnt
             for r in np.flatnonzero(~fast):
-                if not valid[r]:
-                    continue  # NULL array explodes to nothing
                 vals = vec[int(r)].as_py()
+                if vals is None:
+                    continue  # NULL array explodes to nothing
                 for j, qv in enumerate(vals):
                     if j >= dim:
                         raise ArithmeticError(
@@ -389,18 +342,6 @@ def _lloyd_stats_arrow(
     )
 
 
-def _assign(pts: DataFrame, centroids: dict[int, list[float]]) -> DataFrame:
-    scored = F.array(
-        *[
-            F.struct(_dist2(F.col("q"), centroids[cid]).alias("d"),
-                     F.lit(cid).alias("cid"))
-            for cid in sorted(centroids)
-        ]
-    )
-    best = F.array_min(scored)  # lexicographic (d, cid): smallest id wins ties
-    return pts.withColumn("cluster", best.getField("cid"))
-
-
 def kmeans_assignments(
     df: DataFrame,
     *,
@@ -458,9 +399,9 @@ def _lloyd(
     for _ in range(n_iter - 1):
         # assignment argmins + the dim-wide posexplode aggregate fused
         # into one Arrow partial-aggregation stage (r14): the interpreted
-        # _assign HOF folds were the whole fit cost — emb_semantic_dedup's
+        # _dist2 argmin folds were the whole fit cost — emb_semantic_dedup's
         # adaptive-k fit read 16.1 s of its 19.0 s sf0.5 total
-        # (tools/ab_semantic_dedup.py). strict_len reproduces _assign's
+        # (tools/ab_semantic_dedup.py). strict_len keeps the whole-vector
         # hostile contract (ANY malformed vector, over-long included,
         # degrades to the smallest cid).
         stats = _lloyd_stats_arrow(
@@ -554,53 +495,6 @@ def _lloyd_books_multi(
     return books
 
 
-def opq_dim_permutation(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_sub: int = 4,
-    scale: int = 1000,
-) -> list[int]:
-    """OPQ-style dimension allocation (Ge et al., CVPR'13 — the parametric
-    init): assign dimensions to subspaces so each subspace carries a
-    BALANCED share of the corpus variance, instead of PQ's arbitrary
-    index-order slicing. Full OPQ learns a dense rotation by alternating
-    Procrustes/Lloyd; the allocation step alone (rank dims by variance,
-    snake-deal into subspaces) captures the bulk of the benefit when
-    per-dim scales differ, is a pure PERMUTATION (restatable in SQL), and
-    adds zero cost to the scan path.
-
-    Deterministic: variance ranked by the exact integer numerator
-    n·Σx² − (Σx)² over quantized components (order-independent sums),
-    ties to the smaller dim; snake order (left-to-right then right-to-
-    left per pass) balances totals. Returns 0-based source indices in
-    subspace-major order: ``perm[s*sub + j]`` is the source dim of slot
-    ``j`` of subspace ``s``.
-    """
-    q = quantize_vec(F.col(vec_col), scale)
-    stats = (
-        df.select(F.posexplode(q).alias("dim", "v"))
-        .groupBy("dim")
-        .agg(
-            F.sum("v").alias("s1"),
-            F.sum(F.col("v") * F.col("v")).alias("s2"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    var_num = {
-        r["dim"]: r["n"] * r["s2"] - r["s1"] * r["s1"] for r in stats
-    }
-    ranked = sorted(range(dim), key=lambda d: (-var_num.get(d, 0), d))
-    sub_slots: list[list[int]] = [[] for _ in range(n_sub)]
-    for rk, d in enumerate(ranked):
-        passno, off = divmod(rk, n_sub)
-        s = off if passno % 2 == 0 else n_sub - 1 - off
-        sub_slots[s].append(d)
-    return [d for slots in sub_slots for d in slots]
-
-
 def pq_topk(
     df: DataFrame,
     *,
@@ -613,7 +507,6 @@ def pq_topk(
     n_iter: int = 2,
     scale: int = 1000,
     topk: int = 10,
-    dim_perm: list[int] | None = None,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al., PAMI'11 — the billion-scale
     standard): the vector splits into ``n_sub`` subspaces, each gets its
@@ -629,16 +522,9 @@ def pq_topk(
     pipeline restates in SQL exactly.
     """
     sub = dim // n_sub
-    qf = quantize_vec(F.col(vec_col), scale)
-    if dim_perm is not None:
-        # OPQ allocation (opq_dim_permutation): a literal reorder of the
-        # quantized components before slicing — downstream fit/encode/ADC
-        # are untouched, and the query vector permutes identically, so
-        # distances keep their meaning
-        qf = F.array(*[qf.getItem(i) for i in dim_perm])
     full = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"),
-        qf.alias("qf"),
+        quantize_vec(F.col(vec_col), scale).alias("qf"),
     ).persist()
 
     # one driver-side fetch of the query's full quantized vector (sliced

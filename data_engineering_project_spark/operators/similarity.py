@@ -6,9 +6,18 @@ The scale path is LSH: random-hyperplane sign bits bucket the vectors so
 candidate generation is a hash-partitioned equi-join on the bucket key
 instead of an all-pairs cross join.
 
-All arithmetic is built-in array expressions (`zip_with`/`aggregate`,
-JVM-side, codegen'd) over `array<float>` cast to double — no Python UDF in
-the scoring loop.
+Two forms of every score live here:
+
+- the expression form (:func:`dot`, :func:`norm`, :func:`cosine`,
+  :func:`topk_cosine`, :func:`lsh_bucket`): ``zip_with``/``aggregate``
+  folds over ``array<float>`` cast to double, evaluated on the JVM. These
+  are the references the tests compare against, and the probe rankings
+  over a handful of centroids still use them;
+- the Arrow kernels (:func:`score_cosine_pairs_vectorized`,
+  :func:`lsh_buckets_vectorized`, :func:`blocked_cosine_pairs`): numpy
+  over whole Arrow batches or blocks, on the shared contract in
+  ``operators/kernels.py`` (the same left fold, so the same doubles, and
+  the same NULL/NaN/ANSI rules on hostile rows).
 """
 
 from __future__ import annotations
@@ -17,6 +26,17 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from data_engineering_project_spark.operators.kernels import (
+    kernel_columns,
+    kernel_input,
+    left_fold,
+    masked_float64,
+    matrix,
+    raise_divide_by_zero,
+    row_lengths,
+    split_rows,
+)
 
 
 def finite_vector(col: Column) -> Column:
@@ -78,80 +98,6 @@ def topk_cosine(
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
-def score_cosine_vectorized(
-    joined: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    query_vec_col: str = "query_embedding",
-    keep_cols: tuple[str, ...] = ("vec_id",),
-) -> DataFrame:
-    """Vectorized cosine scorer: ``keep_cols + (cosine,)`` per input row.
-
-    ``joined`` must already carry a constant broadcast query vector in
-    ``query_vec_col`` (crossJoin against a 1-row query side). The scoring
-    runs as one numpy pass per Arrow batch instead of interpreted
-    higher-order-function expressions (Catalyst doesn't codegen
-    ``aggregate``/``zip_with`` lambdas — they evaluate row-at-a-time on the
-    JVM, the dominant cost of the expression path).
-
-    Bit-exactness with :func:`cosine`: ``np.cumsum`` is ufunc
-    ``add.accumulate`` — a strict left fold in doubles, the SAME operation
-    order as the expression path's ``F.aggregate(..., acc + x)`` and the
-    SQL oracle's ``list_sum`` — so dot, norms, and the final cosine
-    reproduce identical doubles (asserted in tests/test_similarity.py).
-
-    Passthrough column types are derived from the input schema (a
-    hardcoded ``long`` would silently miscast int/string ids — ADVICE r3).
-    """
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            # the broadcast query vector is identical on every row of the
-            # crossJoin — lift it once per batch instead of stacking a
-            # redundant (n, dim) matrix
-            q0 = pdf[query_vec_col].iloc[0]
-            # NULL vectors (corrupt rows, fuzzed data) must yield a NULL
-            # cosine, never a ragged np.stack crash that kills the task —
-            # at 100 TB one bad row cannot take down the job (null-fuzz
-            # sweep finding). A NULL query vector nulls the whole batch,
-            # matching the oracle's NULL-propagating list expressions.
-            if q0 is None:
-                out = {c: pdf[c] for c in keep_cols}
-                out["cosine"] = pd.Series([None] * len(pdf), dtype=object)
-                yield pd.DataFrame(out)
-                continue
-            q = np.asarray(q0, dtype=np.float64)
-            ok = np.fromiter(
-                (v is not None and len(v) == len(q) for v in pdf[vec_col]),
-                dtype=bool,
-                count=len(pdf),
-            )
-            cos = np.full(len(pdf), np.nan)
-            if ok.any():
-                V = np.stack(pdf[vec_col].values[ok]).astype(np.float64)
-                dots = np.cumsum(V * q, axis=1)[:, -1]
-                nv = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-                nq = np.sqrt(np.cumsum(q * q)[-1])
-                cos[ok] = dots / (nv * nq)
-            out = {c: pdf[c] for c in keep_cols}
-            out["cosine"] = pd.Series(
-                [float(c) if m else None for c, m in zip(cos, ok)],
-                dtype=object,
-            )
-            yield pd.DataFrame(out)
-
-    fields = ", ".join(
-        f"{c} {joined.schema[c].dataType.simpleString()}" for c in keep_cols
-    )
-    narrowed = joined.select(*keep_cols, vec_col, query_vec_col)
-    return narrowed.mapInPandas(batches, f"{fields}, cosine double")
-
-
 def score_cosine_pairs_vectorized(
     joined: DataFrame,
     *,
@@ -159,56 +105,57 @@ def score_cosine_pairs_vectorized(
     query_vec_col: str = "query_embedding",
     keep_cols: tuple[str, ...] = ("vec_id",),
 ) -> DataFrame:
-    """Row-PAIR cosine scorer: like :func:`score_cosine_vectorized` but the
-    query vector varies per row — the kernel of a batched kNN JOIN, where
-    each corpus row arrives already matched to (possibly many) query rows
-    and all pairs score in one numpy pass per Arrow batch. The constant-
-    query scorer would silently misscore here (it lifts the first row's
-    query for the whole batch), so this variant stacks BOTH matrices.
+    """Row-pair cosine scorer: ``keep_cols + (cosine,)`` per input row,
+    scoring ``vec_col`` against the same row's ``query_vec_col`` — a
+    broadcast single query (crossJoin against a 1-row query side) or one
+    query per row (the kernel of a batched kNN join) alike. One numpy pass
+    per Arrow batch (``mapInArrow``) instead of interpreted higher-order
+    functions (Catalyst doesn't codegen ``aggregate``/``zip_with`` lambdas
+    — they evaluate row-at-a-time on the JVM).
 
-    Bit-exactness: same ``np.cumsum`` strict-left-fold device as the
-    constant-query scorer, so dot, norms, and the final cosine reproduce
-    the SQL oracle's ``list_sum`` doubles exactly.
+    Bit-exact with :func:`cosine`: dot and both norms are the strict left
+    fold of ``operators/kernels.py``, the order of ``F.aggregate(...,
+    acc + x)`` and of the SQL oracle's ``list_sum`` (asserted in
+    tests/test_similarity.py). The cosine is NULL for a NULL, ragged or
+    empty row, a NULL query, and wherever the IEEE cosine is NaN.
+
+    Passthrough column types are taken from the input (a hardcoded
+    ``long`` would silently miscast int/string ids).
     """
 
     def batches(it):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in it:
-            if not len(pdf):
-                continue
-            # NULL/ragged rows score NULL instead of crashing np.stack —
-            # same hardening contract as the constant-query scorer
-            dims = [
-                (len(v) if v is not None else -1, len(q) if q is not None else -1)
-                for v, q in zip(pdf[vec_col], pdf[query_vec_col])
-            ]
-            ok = np.fromiter(
-                (dv == dq and dv > 0 for dv, dq in dims),
-                dtype=bool,
-                count=len(pdf),
+        for rb in it:
+            v, q = rb.column(vec_col), rb.column(query_vec_col)
+            lv, lq = row_lengths(v), row_lengths(q)
+            ok = (lv == lq) & (lv > 0)
+            cos = np.full(rb.num_rows, np.nan)
+            with np.errstate(all="ignore"):
+                # rows of one length stack into one matrix pair
+                for dim in np.unique(lv[ok]):
+                    rows = np.flatnonzero(ok & (lv == dim))
+                    V, Q = matrix(v, rows, dim), matrix(q, rows, dim)
+                    n = len(rows)
+                    dots = left_fold((x * y for x, y in zip(V.T, Q.T)), n)
+                    nv = np.sqrt(left_fold((x * x for x in V.T), n))
+                    nq = np.sqrt(left_fold((x * x for x in Q.T), n))
+                    cos[rows] = dots / (nv * nq)
+            # NaN reads NULL: a NULL or NaN element, an all-zero vector
+            # (0/0) and inf/inf all score NULL, the oracle's contract here
+            # (finite_vector guards keep such rows out of the catalog)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(c) for c in keep_cols]
+                + [masked_float64(cos, np.isnan(cos))],
+                names=[*keep_cols, "cosine"],
             )
-            cos = np.full(len(pdf), np.nan)
-            if ok.any():
-                V = np.stack(pdf[vec_col].values[ok]).astype(np.float64)
-                Q = np.stack(pdf[query_vec_col].values[ok]).astype(np.float64)
-                dots = np.cumsum(V * Q, axis=1)[:, -1]
-                nv = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-                nq = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
-                cos[ok] = dots / (nv * nq)
-            out = {c: pdf[c] for c in keep_cols}
-            out["cosine"] = pd.Series(
-                [float(c) if m else None for c, m in zip(cos, ok)],
-                dtype=object,
-            )
-            yield pd.DataFrame(out)
 
     fields = ", ".join(
         f"{c} {joined.schema[c].dataType.simpleString()}" for c in keep_cols
     )
     narrowed = joined.select(*keep_cols, vec_col, query_vec_col)
-    return narrowed.mapInPandas(batches, f"{fields}, cosine double")
+    return narrowed.mapInArrow(batches, f"{fields}, cosine double")
 
 
 def topk_cosine_vectorized(
@@ -223,10 +170,10 @@ def topk_cosine_vectorized(
     """Bit-exact vectorized twin of :func:`topk_cosine`.
 
     Same shape (broadcast crossJoin → map-only scoring → distributed
-    TakeOrdered); the batch scorer is :func:`score_cosine_vectorized`.
+    TakeOrdered); the batch scorer is :func:`score_cosine_pairs_vectorized`.
     """
     joined = corpus.crossJoin(F.broadcast(query))
-    scored = score_cosine_vectorized(
+    scored = score_cosine_pairs_vectorized(
         joined,
         vec_col=vec_col,
         query_vec_col=query_vec_col,
@@ -280,64 +227,46 @@ def blocked_cosine_pairs(
     quadratic pair stage behind the label-blocked dedup queries and the
     LSH candidate scorer.
 
-    r14 ARROW KERNEL (guide §4: hand whole blocks to vectorized native
-    code): each block ships ONCE through Arrow (`applyInArrow`) — n rows
-    of `dim` floats, not O(n²) pair rows — and the kernel emits the pair
+    Each block ships ONCE through Arrow (``applyInArrow``) — n rows of
+    ``dim`` floats, not O(n²) pair rows — and the kernel emits the pair
     triangle from numpy. The per-pair dot accumulates rank-1 updates in
-    dimension order (``acc += A[:,d]·B[:,d]`` for d = 0..dim-1 from a 0.0
-    matrix), i.e. the identical strict left fold the old
-    ``zip_with``+``aggregate`` expression evaluated, so every IEEE double
-    is bit-identical (NaN/inf included). This replaces the r13 presplit
-    (64 scalar double columns per join side, kept below as
-    :func:`blocked_cosine_pairs_presplit`): the presplit's wide
-    projection cost ~+1 s of planning/codegen constant per consumer at
-    small SF and doubled the join's shuffle bytes; the kernel's plan is a
-    plain block-keyed exchange + FlatMapGroupsInArrow.
+    dimension order (the ``left_fold`` of ``operators/kernels.py``), the
+    identical strict left fold the ``zip_with``+``aggregate`` expression
+    evaluates, so every IEEE double is bit-identical (NaN/inf included).
+    The plan is a plain block-keyed exchange + FlatMapGroupsInArrow.
 
     Fold-semantics contract on hostile rows, reproduced exactly
     (tests/test_similarity.py::
-    test_blocked_pairs_presplit_matches_fold_on_hostile_frame and
-    ..._arrow_kernel_matches_presplit):
+    test_blocked_pairs_match_cosine_fold_on_hostile_frame):
 
     - NULL vector, or any NULL ELEMENT in either side → cosine NULL (the
-      fold's NULL product poisons the dot AND that side's norm; NULL
-      elements are flagged SPARK-side because Arrow→numpy erases the
-      NULL/NaN distinction — the `_lsh_buckets_exact_vectorized` lesson);
+      fold's NULL product poisons the dot AND that side's norm);
     - length mismatch → NULL (``zip_with`` pads the shorter side);
     - two equally SHORT arrays → the shorter fold's real value;
     - NaN/inf elements → IEEE propagation, bit-identical in numpy;
     - a pair whose norm product is EXACTLY 0.0 with a non-NULL dot (two
       empty arrays, or two equal-length all-zero vectors) → the kernel
       RAISES, reproducing ANSI-mode Spark's loud DIVIDE_BY_ZERO on the
-      expression paths (NULL operands stay NULL — the SQL null check
-      precedes the zero check; a NaN divisor is not zero and divides
-      through as IEEE NaN).
+      expression paths.
 
-    NaN must survive the boundary as a VALUE (Spark ranks NaN above every
+    NaN survives the boundary as a VALUE (Spark ranks NaN above every
     double, so ``NaN >= threshold`` is TRUE while ``NULL >= t`` drops the
-    row): `mapInPandas` coerces NaN→NULL at the return boundary, so the
-    kernel is `applyInArrow` with an explicit validity mask.
+    row).
 
     Returns ``(id_a, id_b, <block_col>, cosine)``. Rows with a NULL id or
     NULL block emit no pairs (the old join's ``<``/``=`` semantics).
     """
-    import pyarrow as pa  # driver-side import check  # noqa: F401
-
     id_t = df.schema[id_col].dataType.simpleString()
     blk_t = df.schema[block_col].dataType.simpleString()
     out_schema = (
         f"id_a {id_t}, id_b {id_t}, {block_col} {blk_t}, cosine double"
     )
 
-    src = df.filter(
-        F.col(block_col).isNotNull() & F.col(id_col).isNotNull()
-    ).select(
+    src = kernel_input(
+        df.filter(F.col(block_col).isNotNull() & F.col(id_col).isNotNull()),
+        vec_col,
         F.col(id_col).alias("_id"),
-        F.col(block_col),
-        F.col(vec_col).alias("_vec"),
-        F.coalesce(
-            F.exists(F.col(vec_col), lambda x: x.isNull()), F.lit(False)
-        ).alias("_hn"),
+        block_col,
     )
     # explicit-count repartition on the block key: the shuffle's BYTES are
     # tiny while per-block work is quadratic CPU — AQE's byte-advisory
@@ -354,44 +283,24 @@ def blocked_cosine_pairs(
         import pyarrow.compute as pc
 
         ids = tbl.column("_id").combine_chunks()
-        blk0 = tbl.column(block_col)[0] if tbl.num_rows else None
-        vec = tbl.column("_vec").combine_chunks()
-
-        def _empty() -> "pa.Table":
+        names = ["id_a", "id_b", block_col, "cosine"]
+        if tbl.num_rows < 2:
+            empty = [ids[:0], ids[:0], tbl.column(block_col)[:0]]
             return pa.Table.from_arrays(
-                [
-                    pa.array([], type=ids.type),
-                    pa.array([], type=ids.type),
-                    pa.array([], type=tbl.column(block_col).type),
-                    pa.array([], type=pa.float64()),
-                ],
-                names=["id_a", "id_b", block_col, "cosine"],
+                empty + [masked_float64([], [])], names=names
             )
-
-        m = tbl.num_rows
-        if m < 2:
-            return _empty()
+        blk0 = tbl.column(block_col)[0]
 
         # sort by id so emitted pairs are (smaller id, larger id) — the
         # old join's id_a < id_b orientation (cosine itself is symmetric
         # bit-for-bit: per-element products commute, fold order is by
         # dimension on both orientations)
         order = pc.sort_indices(ids)
-        order_np = order.to_numpy(zero_copy_only=False).astype(np.int64)
         ids = ids.take(order)
+        vec, hn = kernel_columns(tbl)
         vec = vec.take(order)
-        hn = (
-            tbl.column("_hn")
-            .combine_chunks()
-            .to_numpy(zero_copy_only=False)
-            .astype(bool)[order_np]
-        )
-        valid = vec.is_valid().to_numpy(zero_copy_only=False).astype(bool)
-        lens_f = vec.value_lengths().to_numpy(zero_copy_only=False)
-        lens = np.where(
-            valid, np.nan_to_num(lens_f, nan=-1.0), -1.0
-        ).astype(np.int64)
-        fast = valid & ~hn & (lens == dim)
+        hn = hn[order.to_numpy(zero_copy_only=False)]
+        fast, X, lens = split_rows(vec, dim, hn)
 
         pos_i: list = []
         pos_j: list = []
@@ -401,27 +310,18 @@ def blocked_cosine_pairs(
         fast_idx = np.flatnonzero(fast)
         k = len(fast_idx)
         if k >= 2:
-            X = (
-                vec.take(pa.array(fast_idx))
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(k, dim)
-            )
             with np.errstate(all="ignore"):
-                # norm fold: sqrt((0.0 + x0²) + x1² + ...) — cumsum IS
-                # np.add.accumulate, the strict sequential left fold
-                nrm = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+                nrm = np.sqrt(left_fold((x * x for x in X.T), k))
                 # chunk the pair triangle so acc stays ~64 MB
-                cs = max(1, min(k, (1 << 23) // max(k, 1)))
+                cs = max(1, min(k, (1 << 23) // k))
                 for r0 in range(0, k - 1, cs):
                     r1 = min(r0 + cs, k - 1)
                     A = X[r0:r1]
                     P = X[r0 + 1 :]
-                    acc = np.zeros((r1 - r0, P.shape[0]))
-                    for d in range(dim):
-                        # strict left fold over dims: 0.0 + t0 + t1 + ...
-                        acc += A[:, d, None] * P[None, :, d]
+                    acc = left_fold(
+                        (A[:, d, None] * P[None, :, d] for d in range(dim)),
+                        (r1 - r0, P.shape[0]),
+                    )
                     den = nrm[r0:r1][:, None] * nrm[r0 + 1 :][None, :]
                     cos = acc / den
                     mask = (
@@ -430,11 +330,7 @@ def blocked_cosine_pairs(
                     )
                     li, lj = np.nonzero(mask)
                     if (den[li, lj] == 0.0).any():
-                        raise ArithmeticError(
-                            "[DIVIDE_BY_ZERO] zero norm product in "
-                            "blocked_cosine_pairs (ANSI-mode parity with "
-                            "the expression form's Divide)"
-                        )
+                        raise_divide_by_zero("blocked_cosine_pairs")
                     pos_i.append(fast_idx[r0 + li])
                     pos_j.append(fast_idx[r0 + 1 + lj])
                     cos_v.append(cos[li, lj])
@@ -445,60 +341,35 @@ def blocked_cosine_pairs(
             s_i: list = []
             s_j: list = []
             s_v: list = []
-            s_null: list = []
 
             def _pair(a: int, b: int) -> None:
                 # fold value for a pair where at least one side is slow
+                # (None: the fold is NULL)
                 s_i.append(a)
                 s_j.append(b)
-                ok = (
-                    valid[a]
-                    and valid[b]
-                    and not hn[a]
-                    and not hn[b]
-                    and lens[a] == lens[b]
-                )
-                if not ok:
-                    s_v.append(np.nan)
-                    s_null.append(True)
+                if lens[a] < 0 or lens[a] != lens[b] or hn[a] or hn[b]:
+                    s_v.append(None)
                     return
-                if lens[a] == 0:
-                    raise ArithmeticError(
-                        "[DIVIDE_BY_ZERO] zero norm product in "
-                        "blocked_cosine_pairs (two empty arrays; ANSI-mode "
-                        "parity with the expression form's Divide)"
-                    )
                 u = np.asarray(vec[a].as_py(), dtype=np.float64)
                 w = np.asarray(vec[b].as_py(), dtype=np.float64)
                 with np.errstate(all="ignore"):
-                    dv = np.cumsum(u * w)[-1]
-                    na = np.sqrt(np.cumsum(u * u)[-1])
-                    nb = np.sqrt(np.cumsum(w * w)[-1])
-                    den = na * nb
+                    den = np.sqrt(left_fold(u * u)) * np.sqrt(left_fold(w * w))
                     if den == 0.0:
-                        raise ArithmeticError(
-                            "[DIVIDE_BY_ZERO] zero norm product in "
-                            "blocked_cosine_pairs (ANSI-mode parity with "
-                            "the expression form's Divide)"
-                        )
-                    s_v.append(float(dv / den))
-                s_null.append(False)
+                        raise_divide_by_zero("blocked_cosine_pairs")
+                    s_v.append(float(left_fold(u * w) / den))
 
-            fast_pos_sorted = fast_idx  # increasing
             for s in slow_idx:
-                for t in range(int(s) + 1, m):
+                for t in range(int(s) + 1, len(lens)):
                     _pair(int(s), t)
                 # fast partners BEFORE s (slow partners < s were covered
                 # when that smaller slow row iterated)
-                for t in fast_pos_sorted[fast_pos_sorted < s]:
+                for t in fast_idx[fast_idx < s]:
                     _pair(int(t), int(s))
             pos_i.append(np.asarray(s_i, dtype=np.int64))
             pos_j.append(np.asarray(s_j, dtype=np.int64))
-            cos_v.append(np.asarray(s_v, dtype=np.float64))
-            cos_null.append(np.asarray(s_null, dtype=bool))
+            cos_v.append(np.asarray([np.nan if c is None else c for c in s_v]))
+            cos_null.append(np.asarray([c is None for c in s_v], dtype=bool))
 
-        if not pos_i:
-            return _empty()
         pi = np.concatenate(pos_i)
         pj = np.concatenate(pos_j)
         cv = np.concatenate(cos_v)
@@ -507,180 +378,75 @@ def blocked_cosine_pairs(
         id_b = ids.take(pa.array(pj))
         # the old join's STRICT id_a < id_b drops duplicate-id pairs
         neq = pc.not_equal(id_a, id_b)
-        if pc.any(pc.invert(neq)).as_py():
+        if not pc.all(neq).as_py():
             keep = neq.to_numpy(zero_copy_only=False).astype(bool)
             id_a = id_a.filter(neq)
             id_b = id_b.filter(neq)
             cv = cv[keep]
             cn = cn[keep]
         return pa.Table.from_arrays(
-            [
-                id_a,
-                id_b,
-                pa.repeat(blk0, len(cv)),
-                pa.array(cv, mask=cn, type=pa.float64()),
-            ],
-            names=["id_a", "id_b", block_col, "cosine"],
+            [id_a, id_b, pa.repeat(blk0, len(cv)), masked_float64(cv, cn)],
+            names=names,
         )
 
     return src.groupBy(block_col).applyInArrow(score_block, out_schema)
 
 
-def blocked_cosine_pairs_presplit(
+def lsh_buckets_vectorized(
     df: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_col: str,
-    dim: int,
+    dim: int = 64,
+    n_planes: int = 16,
+    seed: int = 42,
 ) -> DataFrame:
-    """The r13 PRESPLIT shape of :func:`blocked_cosine_pairs`, kept as the
-    pure-JVM reference implementation (A/B baseline + equality tests).
-
-    Each side projects its ``dim`` elements into scalar double columns
-    ONCE per vector (O(n)); the pair score is a left-associated compiled
-    sum of plain column products from a 0.0 literal — the identical IEEE
-    evaluation order as the ``zip_with``+``aggregate`` fold it replaced,
-    but every node codegens (higher-order functions are CodegenFallback,
-    so the fold ran INTERPRETED once per pair — 7.3× the marginal at
-    sf0.5, tools/ab_blocked_pairs.py). A well-formedness gate (both
-    arrays exactly ``dim`` long) falls back to the fold so ragged/NULL/
-    NaN inputs keep bit-identical semantics.
-
-    Returns ``(id_a, id_b, <block_col>, cosine)``. Norms are computed once
-    per vector (each pair folds nothing at all on the gated path).
-    """
-    import functools
-
-    wf = F.size(F.col(vec_col)) == dim
-    base = df.select(
-        F.col(id_col),
-        F.col(block_col),
-        F.col(vec_col),
-        norm(F.col(vec_col)).alias("_nrm"),
-        wf.alias("_wf"),
-        *[
-            F.get(F.col(vec_col), i).cast("double").alias(f"_x{i}")
-            for i in range(dim)
-        ],
-    )
-    # rename BEFORE the self-join: alias-qualified self-joins on the same
-    # lineage resolve ambiguously in Spark
-    a = base.select(
-        F.col(id_col).alias("id_a"),
-        F.col(block_col),
-        F.col(vec_col).alias("_vec_a"),
-        F.col("_nrm").alias("_nrm_a"),
-        F.col("_wf").alias("_wf_a"),
-        *[F.col(f"_x{i}").alias(f"_a{i}") for i in range(dim)],
-    )
-    b = base.select(
-        F.col(id_col).alias("id_b"),
-        F.col(block_col).alias("_block_b"),
-        F.col(vec_col).alias("_vec_b"),
-        F.col("_nrm").alias("_nrm_b"),
-        F.col("_wf").alias("_wf_b"),
-        *[F.col(f"_x{i}").alias(f"_b{i}") for i in range(dim)],
-    )
-    split_dot = functools.reduce(
-        lambda acc, t: acc + t,
-        [F.col(f"_a{i}") * F.col(f"_b{i}") for i in range(dim)],
-        F.lit(0.0),
-    )
-    pair_dot = F.when(
-        F.col("_wf_a") & F.col("_wf_b"), split_dot
-    ).otherwise(dot(F.col("_vec_a"), F.col("_vec_b")))
-    return a.join(
-        b,
-        (F.col(block_col) == F.col("_block_b"))
-        & (F.col("id_a") < F.col("id_b")),
-    ).select(
-        "id_a",
-        "id_b",
-        block_col,
-        (pair_dot / (F.col("_nrm_a") * F.col("_nrm_b"))).alias("cosine"),
-    )
-
-
-def _lsh_buckets_exact_vectorized(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_planes: int,
-    seed: int,
-) -> DataFrame:
-    """``(id, bucket)`` — numpy-vectorized EXACT twin of the per-row
-    :func:`lsh_bucket` expression, malformed rows included.
-
-    Differs from :func:`lsh_buckets_vectorized` (which emits NULL buckets
-    for NULL vectors and assumes well-formed lengths) by reproducing the
-    expression form's fold semantics on every hostile row class:
+    """``(id, bucket)`` — the per-row :func:`lsh_bucket` expression as one
+    numpy matmul per Arrow batch (``mapInArrow``), with the same buckets on
+    every row class:
 
     - NULL vector, length ≠ ``dim``, or a NULL ELEMENT → bucket
       ``'0' * n_planes``: ``zip_with`` pads/propagates NULL, the dot folds
-      to NULL, and ``when(NULL >= 0)`` emits '0' for every plane. The
-      NULL-element case must be flagged SPARK-side (``exists(v, isNull)``)
-      because Arrow→pandas converts list nulls to NaN, erasing the
-      NULL/NaN distinction the fold semantics depend on.
+      to NULL, and ``when(NULL >= 0)`` emits '0' for every plane.
     - A NaN element (or inf−inf overflow) makes the projection NaN, and
       Spark's ``NaN >= 0`` is TRUE (NaN sorts above every double) — so
-      NaN projections read bit '1': numpy bits are ``(p >= 0) | isnan(p)``.
-    - Well-formed rows take one matmul per Arrow batch. BLAS pairwise
-      summation can differ from the expression form's strict left fold by
-      ~1 ulp, which only matters when it flips the SIGN — so projections
-      within a relative epsilon of zero (|p| ≤ 1e-9·Σ|xᵢpᵢ|) are
-      recomputed with the exact sequential fold (``np.cumsum``) before the
-      sign is read (ADVICE r13: the empirical sf0.1 bit-identity is now a
-      structural guarantee).
-    """
-    import pandas as pd  # noqa: F401  (driver-side import check)
+      NaN projections read bit '1'.
+    - Well-formed rows take one matmul. BLAS summation order can differ
+      from the expression form's strict left fold by ~1 ulp, which only
+      matters when it flips the SIGN — so projections within a relative
+      epsilon of zero (|p| ≤ 1e-9·Σ|xᵢpᵢ|) are recomputed with the exact
+      fold before the sign is read.
 
+    The id column keeps its input type.
+    """
     planes = _hyperplanes(dim, n_planes, seed)  # captured by value
-    zero_bucket = "0" * n_planes
 
     def batches(it):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         plane_mat = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
-        for pdf in it:
-            ok = np.fromiter(
-                (
-                    v is not None and len(v) == dim and not hn
-                    for v, hn in zip(pdf[vec_col], pdf["_has_null_elem"])
-                ),
-                dtype=bool,
-                count=len(pdf),
-            )
-            buckets = [zero_bucket] * len(pdf)
-            if ok.any():
-                mat = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col][ok]]
-                )
-                proj = mat @ plane_mat  # (n_ok, n_planes)
-                # near-zero projections: BLAS order may differ from the
-                # strict left fold by ~1 ulp — re-fold exactly before the
-                # sign is read (see docstring)
-                scale = np.abs(mat) @ np.abs(plane_mat)
+        for rb in it:
+            vec, hn = kernel_columns(rb)
+            fast, X, _ = split_rows(vec, dim, hn)
+            with np.errstate(all="ignore"):
+                proj = X @ plane_mat  # (n_fast, n_planes)
+                scale = np.abs(X) @ np.abs(plane_mat)
                 for ri, pi in zip(*np.nonzero(np.abs(proj) <= 1e-9 * scale)):
-                    proj[ri, pi] = np.cumsum(mat[ri] * plane_mat[:, pi])[-1]
-                bits = (proj >= 0) | np.isnan(proj)
-                strs = ["".join("10"[1 - b] for b in row) for row in bits]
-                it_s = iter(strs)
-                buckets = [next(it_s) if m else zero_bucket for m in ok]
-            yield pd.DataFrame({id_col: pdf[id_col], "bucket": buckets})
+                    proj[ri, pi] = left_fold(X[ri] * plane_mat[:, pi])
+            bits = np.zeros((rb.num_rows, n_planes), dtype=bool)
+            bits[fast] = (proj >= 0) | np.isnan(proj)
+            chars = np.where(bits, ord("1"), ord("0")).astype(np.uint8)
+            buckets = pa.array(chars.view(f"S{n_planes}").ravel())
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), buckets.cast(pa.string())],
+                names=[id_col, "bucket"],
+            )
 
     id_type = df.schema[id_col].dataType.simpleString()
-    src = df.select(
-        id_col,
-        vec_col,
-        F.coalesce(
-            F.exists(F.col(vec_col), lambda x: x.isNull()), F.lit(False)
-        ).alias("_has_null_elem"),
+    return kernel_input(df, vec_col, id_col).mapInArrow(
+        batches, f"{id_col} {id_type}, bucket string"
     )
-    return src.mapInPandas(batches, f"{id_col} {id_type}, bucket string")
 
 
 def lsh_candidate_pairs(
@@ -696,18 +462,15 @@ def lsh_candidate_pairs(
     buckets (id_a < id_b), score exactly with cosine. The self-join shuffles
     both sides on the bucket key only — no cross join ever materializes.
 
-    r13 shape: bucketing is one numpy matmul per Arrow batch
-    (:func:`_lsh_buckets_exact_vectorized` — the pre-r13 per-row
-    ``lsh_bucket`` expression folded n_planes interpreted dots per vector,
-    and its 512-literal plane tree dominated small-SF planning), joined
-    back on the id; scoring runs through :func:`blocked_cosine_pairs`
-    (presplit compiled dot, norms once per vector — the expression this
-    wrapped before re-folded the dot AND both norms interpreted once per
-    PAIR). sf0.1→sf0.5 marginal 3.6 → 0.4 s (tools/ab_lsh_pairs.py);
-    outputs bit-identical (asserted there at sf0.1, and on every malformed
-    row class by construction — see the bucketing twin's docstring).
+    Bucketing is one numpy matmul per Arrow batch
+    (:func:`lsh_buckets_vectorized` — the per-row ``lsh_bucket``
+    expression folded n_planes interpreted dots per vector, and its
+    512-literal plane tree dominated small-SF planning), joined back on the
+    id; scoring runs through :func:`blocked_cosine_pairs`. Both kernels
+    reproduce the expression form on every malformed row class (asserted
+    in tests/test_similarity.py).
     """
-    buckets = _lsh_buckets_exact_vectorized(
+    buckets = lsh_buckets_vectorized(
         corpus, id_col=id_col, vec_col=vec_col, dim=dim,
         n_planes=n_planes, seed=seed,
     )
@@ -717,53 +480,3 @@ def lsh_candidate_pairs(
     return blocked_cosine_pairs(
         bucketed, id_col=id_col, vec_col=vec_col, block_col="bucket", dim=dim
     ).select("id_a", "id_b", "cosine")
-
-
-def lsh_buckets_vectorized(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Vectorized twin of ``lsh_bucket``: one numpy matmul per Arrow batch
-    instead of per-row expression interpretation (~100× per-row at bulk
-    scale — the right engine for bucketing billions of vectors; the
-    expression form remains the bit-exact reference). Same hyperplanes, same
-    buckets: projections within a relative epsilon of zero are re-folded
-    with the exact sequential order before the sign is read, so a BLAS
-    pairwise-summation ulp can never flip a bucket bit (ADVICE r13).
-    """
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    planes = _hyperplanes(dim, n_planes, seed)  # captured by value
-
-    def batches(it):
-        import numpy as np
-
-        plane_mat = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
-        for pdf in it:
-            # NULL vectors can't be bucketed — emit NULL, don't crash the
-            # task on a ragged np.array (null-fuzz finding)
-            ok = np.fromiter(
-                (v is not None for v in pdf[vec_col]), dtype=bool, count=len(pdf)
-            )
-            buckets = [None] * len(pdf)
-            if ok.any():
-                mat = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col][ok]]
-                )
-                proj = mat @ plane_mat  # (n_ok, n_planes)
-                scale = np.abs(mat) @ np.abs(plane_mat)
-                for ri, pi in zip(*np.nonzero(np.abs(proj) <= 1e-9 * scale)):
-                    proj[ri, pi] = np.cumsum(mat[ri] * plane_mat[:, pi])[-1]
-                bits = proj >= 0  # (n_ok, n_planes)
-                strs = ["".join("10"[1 - b] for b in row) for row in bits]
-                it_s = iter(strs)
-                buckets = [next(it_s) if m else None for m in ok]
-            yield pd.DataFrame({id_col: pdf[id_col], "bucket": buckets})
-
-    out_schema = f"{id_col} long, bucket string"
-    return df.select(id_col, vec_col).mapInPandas(batches, out_schema)

@@ -69,9 +69,10 @@ def build_daily_report(
         filtered = filtered.observe(
             observation,
             F.count(F.lit(1)).alias("rows_matched"),
-            # observed metrics forbid DISTINCT aggregates; the HLL sketch is
-            # exact at date-cardinality scales and always merge-safe
-            F.approx_count_distinct(F.col("event_date")).alias("n_dates"),
+            # observed metrics forbid DISTINCT aggregates; the set of dates
+            # is tiny (one batch spans days) and exact, where the HLL sketch
+            # already misreads 7 dates as 6
+            F.size(F.collect_set(F.col("event_date"))).alias("n_dates"),
             F.count(F.when(F.col(ua_column).isNull(), 1)).alias("null_ua_rows"),
         )
     split = Q.split_valid_invalid(

@@ -395,10 +395,9 @@ def _blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator pins its own explicit block-key repartition (AQE byte-
     # advisory coalescing would single-thread the CPU-bound blocks), so
     # no repartition here. r13 history: fold (interpreted HOF) 17.5 s →
-    # presplit compiled columns 2.4 s sf0.5 marginal
-    # (tools/ab_blocked_pairs.py); the presplit's 64-wide projection cost
-    # ~+1 s planning constant per consumer at sf0.1 — the Arrow kernel
-    # removes both.
+    # presplit compiled columns 2.4 s sf0.5 marginal (OPTIMIZATION_r13.md);
+    # the presplit's 64-wide projection cost ~+1 s planning constant per
+    # consumer at sf0.1 — the Arrow kernel removes both.
     return S.blocked_cosine_pairs(
         e, id_col="vec_id", vec_col="embedding", block_col="label",
         dim=EMB_DIM,

@@ -128,7 +128,7 @@ def emb_label_centroid_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(12 planes, seed 42), bucket population counts. The candidate-generation "
     "half of scalable near-dup / ANN search; scoring happens only within "
     "buckets (see operators/similarity.py:lsh_candidate_pairs). Bucketing "
-    "runs through the numpy-vectorized mapInPandas path (one matmul per "
+    "runs through the numpy-vectorized mapInArrow kernel (one matmul per "
     "Arrow batch) — tested bit-identical to the expression path, ~100× "
     "per-row at bulk scale. The hyperplanes are deterministic plan "
     "literals, so the DuckDB oracle embeds the same doubles and "
@@ -263,7 +263,7 @@ def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # numpy batch scorer (bit-exact twin of the expression fold — see
     # operators/similarity.py), not row-at-a-time HOF evaluation
     cand = e.filter(F.col("vec_id") != 0).join(F.broadcast(probe), "label")
-    scored = S.score_cosine_vectorized(
+    scored = S.score_cosine_pairs_vectorized(
         cand.crossJoin(F.broadcast(q)),
         vec_col="embedding",
         query_vec_col="qe",
@@ -1671,8 +1671,7 @@ _KNN_SQL = f"""
     "every corpus partition is read once for ALL queries, with zero "
     "shuffles of the big side; each candidate (corpus row, query) pair "
     "scores through the row-pair vectorized cosine kernel "
-    "(score_cosine_pairs_vectorized — the constant-query scorer would "
-    "silently lift one query per batch), and top-3 per query falls out "
+    "(score_cosine_pairs_vectorized), and top-3 per query falls out "
     "of one window. Oracle restates centroids, probe ranking, and the "
     "exact cosine fold per pair.",
     tags=("similarity", "ann", "knn-join"),

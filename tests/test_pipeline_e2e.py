@@ -173,3 +173,17 @@ def test_observation_metrics_collected_without_extra_jobs(result):
     # 2 parseable dates + NULL date from the malformed filename
     assert metrics["n_dates"] == 2
     assert metrics["null_ua_rows"] == 0
+
+
+def test_observed_n_dates_is_exact(spark, tmp_path):
+    """n_dates counts the batch's distinct dates exactly: seven dates
+    (2022-05-20..26) read 7, where an approx_count_distinct sketch read 6."""
+    src = tmp_path / "raw"
+    src.mkdir()
+    for day in range(20, 27):
+        ts = f"202205{day}113212045"
+        name = f"impressions_processed_dk_{ts}_172845633-172845635_1.parquet"
+        pq.write_table(_event_table(2), str(src / name))
+    res = run_daily_report(spark, str(src), str(tmp_path / "out"), user_agent=UA)
+    assert res.observation.get["n_dates"] == 7
+    assert len(res.csv_paths) == 7

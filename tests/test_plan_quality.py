@@ -898,6 +898,83 @@ def test_serving_index_probe_reads_are_pruned(spark, sf_dir, tmp_path):
     assert n_paths == 2, plan[:500]
 
 
+#: an interpreted vector fold: ``aggregate(zip_with(...), 0.0, acc + x)``
+#: (a bare elementwise ``zip_with``, e.g. an IVF-PQ residual, folds nothing)
+_VECTOR_FOLD = "aggregate("
+_NOT_ARROW = ("BatchEvalPython", "MapInPandas")
+
+#: emb_* plans that call an Arrow kernel yet keep an expression fold
+_FOLD_ALLOWED = {
+    # the probe ranks a handful of centroids with cosine(); the per-row
+    # scoring is the Arrow scorer
+    "emb_ivf_topk",
+    "emb_ivf_recall",
+    "emb_knn_join",
+    # the integer-dot pair stage is its own open item (ROADMAP direction 2)
+    "emb_semantic_dedup",
+}
+
+
+def test_vector_kernel_plans_cross_through_arrow_without_folds(plans):
+    """Every emb_* plan whose vector path runs an Arrow kernel
+    (operators/kernels.py) shows no BatchEvalPython, no MapInPandas and —
+    outside the allowlist — no interpreted aggregate/zip_with fold."""
+    import __spark_entry__ as m
+
+    kernel_plans = 0
+    for name in sorted(n for n in m.queries() if n.startswith("emb_")):
+        plan = plans(name)
+        if "MapInArrow" not in plan and "FlatMapGroupsInArrow" not in plan:
+            continue
+        kernel_plans += 1
+        for node in _NOT_ARROW:
+            assert node not in plan, (name, node)
+        if name not in _FOLD_ALLOWED:
+            assert _VECTOR_FOLD not in plan, name
+    assert kernel_plans >= 12
+
+
+def test_ivf_index_build_append_query_plans_use_arrow_kernels(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The serving index's build, append and query plans run the Arrow
+    kernels: cell assignment through pq_codes_arrow (build and append
+    alike) and in-cell scoring through the row-pair scorer — no
+    BatchEvalPython, no MapInPandas, no interpreted distance fold."""
+    from data_engineering_project_spark.operators import ann_index
+    from data_engineering_project_spark.sinks import snapshot_table as snap
+
+    written = {}
+
+    def spy(fn, label):
+        def wrapped(*args, **kwargs):
+            df = next(a for a in args if hasattr(a, "_jdf"))
+            written.setdefault(label, []).append(
+                df._jdf.queryExecution().executedPlan().toString()
+            )
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(snap, "write_table", spy(snap.write_table, "build"))
+    monkeypatch.setattr(snap, "merge_upsert", spy(snap.merge_upsert, "append"))
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    table = str(tmp_path / "ivf")
+    ann_index.build_ivf_index(emb.filter("vec_id % 2 = 0"), table, k=4)
+    ann_index.append_to_ivf_index(emb.filter("vec_id % 2 = 1"), table)
+    qv = [float(v) for v in emb.orderBy("vec_id").first()["embedding"]]
+    query = ann_index.query_ivf_index(spark, table, qv, k=5, nprobe=2)
+
+    build_data, append = written["build"][0], written["append"][0]
+    query_plan = query._jdf.queryExecution().executedPlan().toString()
+    for label, plan in (
+        ("build", build_data), ("append", append), ("query", query_plan)
+    ):
+        assert "MapInArrow" in plan, label
+        for node in (*_NOT_ARROW, _VECTOR_FOLD, "zip_with("):
+            assert node not in plan, (label, node)
+
+
 def test_brute_topk_windows_get_rank_limit_pushdown(plans):
     """The brute-force ANN top-k shapes (emb_cosine_topk, emb_knn_join,
     emb_hard_negatives) feed a row_number window whose INPUT is

@@ -1,7 +1,7 @@
 """Similarity operators: the vectorized cosine scorer must be BIT-exact
-against the expression path (np.cumsum = add.accumulate = the same left
-fold in doubles as F.aggregate's acc+x), not merely approximately equal —
-the SQL oracle hashes exact values after ROUND."""
+against the expression path (operators/kernels.py:left_fold is the same
+left fold in doubles as F.aggregate's acc+x), not merely approximately
+equal — the SQL oracle hashes exact values after ROUND."""
 
 from __future__ import annotations
 
@@ -135,60 +135,11 @@ def test_pq_and_ivfpq_release_all_caches(spark):
     assert after <= before, f"{after - before} cached relations leaked"
 
 
-def test_opq_dim_permutation_is_a_balanced_valid_permutation(spark):
-    """OPQ allocation invariants: the output is a true permutation of the
-    dims, deterministic, and snake-dealing balances per-subspace variance —
-    max/min subspace variance-share ratio must beat index-order slicing on
-    a corpus with a strong per-dim scale gradient."""
-    import random
-
-    from data_engineering_project_spark.operators.clustering import (
-        opq_dim_permutation,
-        pq_topk,
-    )
-
-    rng = random.Random(7)
-    dim, n_sub, sub = 16, 4, 4
-    # scale gradient: dim i has stddev ~ (i+1), so index-order slicing puts
-    # all the variance into the last subspace
-    rows = [
-        (i, [rng.gauss(0.0, (d + 1) / 4.0) for d in range(dim)])
-        for i in range(200)
-    ]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    perm = opq_dim_permutation(e, dim=dim, n_sub=n_sub)
-    assert sorted(perm) == list(range(dim))
-    assert perm == opq_dim_permutation(e, dim=dim, n_sub=n_sub)  # deterministic
-
-    import statistics
-
-    var = [statistics.pvariance([r[1][d] for r in rows]) for d in range(dim)]
-
-    def share_spread(order):
-        shares = [
-            sum(var[d] for d in order[s * sub : (s + 1) * sub])
-            for s in range(n_sub)
-        ]
-        return max(shares) / min(shares)
-
-    assert share_spread(perm) < share_spread(list(range(dim)))
-
-    # identity permutation must be a no-op vs plain PQ
-    plain = pq_topk(e, query_id=0, dim=dim, n_sub=n_sub, k=4, n_iter=1, topk=5)
-    ident = pq_topk(
-        e, query_id=0, dim=dim, n_sub=n_sub, k=4, n_iter=1, topk=5,
-        dim_perm=list(range(dim)),
-    )
-    assert [r.asDict() for r in plain.collect()] == [
-        r.asDict() for r in ident.collect()
-    ]
-
-
 def test_rowpair_scorer_bit_identical_to_expression_cosine(spark):
     """score_cosine_pairs_vectorized (the batched kNN-join kernel, query
     varies per row) must reproduce the expression path's doubles exactly
-    for every pair — and must NOT exhibit the constant-query scorer's
-    lift-first-row behavior."""
+    for every pair — each row scored against its own query, never one
+    query lifted for the whole batch."""
     from data_engineering_project_spark.operators.similarity import (
         cosine,
         score_cosine_pairs_vectorized,
@@ -278,19 +229,32 @@ def test_dimsum_centroids_match_posexplode_build(spark):
             assert r[f"c{i}"] == old.get((r["label"], i)), (r["label"], i)
 
 
-def test_blocked_pairs_arrow_kernel_matches_presplit(spark):
-    """The r14 Arrow kernel (blocked_cosine_pairs) must reproduce the r13
-    presplit JVM shape (blocked_cosine_pairs_presplit) bit-for-bit on every
-    hostile row class — same pair SET, same NULL/NaN/short-fold values —
-    and must preserve NaN as a VALUE across the Arrow boundary (Spark ranks
-    NaN above every double, so a NaN→NULL coercion would flip downstream
-    `c >= t` filters). Also pins the duplicate-id rule: the old join's
-    strict id_a < id_b emits NO self-pair for two rows sharing an id."""
+def _same_double(a, b) -> bool:
     import math
+
+    return (
+        a == b
+        or (a is None and b is None)
+        or (a is not None and b is not None and math.isnan(a) and math.isnan(b))
+    )
+
+
+def test_blocked_pairs_match_cosine_fold_on_hostile_frame(spark):
+    """blocked_cosine_pairs' Arrow kernel must reproduce a cosine() fold
+    self-join (zip_with+aggregate per pair, blocks joined on equality with
+    id_a < id_b) bit-for-bit on every hostile row class — same pair SET,
+    same NULL/NaN/short-fold values — and must preserve NaN as a VALUE
+    across the Arrow boundary (Spark ranks NaN above every double, so a
+    NaN→NULL coercion would flip downstream `c >= t` filters). Also pins
+    the duplicate-id rule: strict id_a < id_b emits NO self-pair for two
+    rows sharing an id, and a NULL block pairs with nothing."""
+    import math
+
+    import pytest
 
     from data_engineering_project_spark.operators.similarity import (
         blocked_cosine_pairs,
-        blocked_cosine_pairs_presplit,
+        cosine,
     )
 
     dim = 6
@@ -303,7 +267,7 @@ def test_blocked_pairs_arrow_kernel_matches_presplit(spark):
     nullv = [1.0] * dim
     nullv[4] = None
     rows += [
-        (5, nanv, "b0"),  # NaN element: cosine NaN on both paths
+        (5, nanv, "b0"),  # NaN element: cosine NaN
         (6, nullv, "b0"),  # NULL element: cosine NULL
         (7, [0.9, 0.7], "b0"),  # equal-short pair: real partial fold
         (8, [0.8, 0.6], "b0"),
@@ -320,62 +284,68 @@ def test_blocked_pairs_arrow_kernel_matches_presplit(spark):
         rows, "vec_id long, embedding array<float>, label string"
     )
 
-    def collect(fn):
-        out = {}
-        for r in fn(
-            e, id_col="vec_id", vec_col="embedding", block_col="label",
-            dim=dim,
-        ).collect():
-            key = (r["id_a"], r["id_b"], r["label"])
-            assert key not in out, f"duplicate pair {key}"
-            out[key] = r["cosine"]
-        return out
+    side = lambda n: e.select(  # noqa: E731
+        F.col("vec_id").alias(f"id_{n}"),
+        F.col("embedding").alias(f"v_{n}"),
+        F.col("label").alias(f"l_{n}"),
+    )
+    fold = side("a").join(
+        side("b"),
+        (F.col("l_a") == F.col("l_b")) & (F.col("id_a") < F.col("id_b")),
+    )
+    old = {
+        (r["id_a"], r["id_b"], r["l_a"]): r["c"]
+        for r in fold.select(
+            "id_a", "id_b", "l_a", cosine(F.col("v_a"), F.col("v_b")).alias("c")
+        ).collect()
+    }
+    new = {}
+    for r in blocked_cosine_pairs(
+        e, id_col="vec_id", vec_col="embedding", block_col="label", dim=dim
+    ).collect():
+        key = (r["id_a"], r["id_b"], r["label"])
+        assert key not in new, f"duplicate pair {key}"
+        new[key] = r["cosine"]
 
-    old = collect(blocked_cosine_pairs_presplit)
-    new = collect(blocked_cosine_pairs)
     assert set(new) == set(old)
     n_b0 = 12
     assert len([k for k in new if k[2] == "b0"]) == n_b0 * (n_b0 - 1) // 2
     assert (30, 30, "b2") not in new  # duplicate-id self-pair dropped
-    for k in old:
-        a, b = old[k], new[k]
-        assert (
-            a == b
-            or (a is None and b is None)
-            or (a is not None and b is not None and math.isnan(a) and math.isnan(b))
-        ), (k, a, b)
+    diverged = [k for k in old if not _same_double(old[k], new[k])]
+    assert not diverged, [(k, old[k], new[k]) for k in diverged]
     # NaN survived the Arrow boundary as NaN (not coerced to NULL):
     assert new[(0, 5, "b0")] is not None and math.isnan(new[(0, 5, "b0")])
     # NULL-element and mismatched-length pairs stay NULL:
     assert new[(0, 6, "b0")] is None and new[(0, 9, "b0")] is None
-    # the equal-short pair carries the REAL partial fold on both paths:
+    # the equal-short pair carries the REAL partial fold:
     assert new[(7, 8, "b0")] is not None and not math.isnan(new[(7, 8, "b0")])
 
     # ANSI parity on a zero norm product (two empty arrays in one block):
-    # the expression form raises Spark's DIVIDE_BY_ZERO; the Arrow kernel
-    # must be equally loud, not quietly emit NaN/NULL
-    import pytest
-
+    # the fold raises Spark's DIVIDE_BY_ZERO; the kernel must be equally
+    # loud, not quietly emit NaN/NULL
     ee = spark.createDataFrame(
         [(0, [], "z"), (1, [], "z")],
         "vec_id long, embedding array<float>, label string",
     )
-    for fn in (blocked_cosine_pairs_presplit, blocked_cosine_pairs):
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            fn(
-                ee, id_col="vec_id", vec_col="embedding",
-                block_col="label", dim=dim,
-            ).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        ee.alias("a").join(
+            ee.alias("b"), F.col("a.vec_id") < F.col("b.vec_id")
+        ).select(cosine(F.col("a.embedding"), F.col("b.embedding"))).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        blocked_cosine_pairs(
+            ee, id_col="vec_id", vec_col="embedding", block_col="label",
+            dim=dim,
+        ).collect()
 
 
 def test_blocked_pairs_presplit_matches_fold_on_hostile_frame(spark, tmp_path):
-    """_blocked_pairs' r13 presplit dot (64 scalar double columns per side,
-    left-associated compiled sum, wf-gated) must reproduce the old
-    zip_with+aggregate fold shape bit-for-bit on EVERY hostile row class:
-    well-formed 64-dim floats, a NULL element, a NaN element, TWO equally
-    short arrays (the fold sums a SHORTER left fold — the case only the
-    fallback branch can reproduce), a length-mismatched array (NULL dot on
-    both paths), a NULL embedding, and an empty array."""
+    """_blocked_pairs (the plan-level pair stage, once a 64-column presplit
+    dot, now blocked_cosine_pairs' Arrow kernel) must reproduce the old
+    zip_with+aggregate fold shape bit-for-bit at the query's real 64-dim
+    width on EVERY hostile row class: well-formed floats, a NULL element,
+    a NaN element, TWO equally short arrays (the fold sums a SHORTER left
+    fold), a length-mismatched array (NULL dot), a NULL embedding, and an
+    empty array — all read back through parquet like the query does."""
     import math
 
     from data_engineering_project_spark.operators.similarity import dot, norm
@@ -396,7 +366,7 @@ def test_blocked_pairs_presplit_matches_fold_on_hostile_frame(spark, tmp_path):
     nan_elem[3] = float("nan")
     rows.append((7, nan_elem, 0))
     rows.append((8, [0.9, 0.9, 0.9], 0))  # equally-short pair: fold sums
-    rows.append((9, [0.8, 0.95, 0.99], 0))  # 3 terms, presplit must too
+    rows.append((9, [0.8, 0.95, 0.99], 0))  # 3 terms, the kernel must too
     rows.append((10, [0.5] * 5, 0))  # length-mismatched vs everything
     rows.append((11, None, 0))  # NULL embedding
     rows.append((12, [], 0))  # empty array
@@ -405,60 +375,85 @@ def test_blocked_pairs_presplit_matches_fold_on_hostile_frame(spark, tmp_path):
     )
     e.write.parquet(str(tmp_path / "embeddings.parquet"))
 
-    def old_shape():
-        base = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
-        base = base.select(
-            "vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm")
-        )
-        a = base.select(
-            F.col("vec_id").alias("id_a"),
-            "label",
-            F.col("embedding").alias("vec_a"),
-            F.col("nrm").alias("nrm_a"),
-        )
-        b = base.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("label").alias("label_b"),
-            F.col("embedding").alias("vec_b"),
-            F.col("nrm").alias("nrm_b"),
-        )
-        return a.join(
-            b,
-            (F.col("label") == F.col("label_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        ).select(
-            "id_a",
-            "id_b",
-            (
-                dot(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("nrm_a") * F.col("nrm_b"))
-            ).alias("c"),
-        )
+    base = spark.read.parquet(str(tmp_path / "embeddings.parquet")).select(
+        "vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm")
+    )
+    a = base.select(
+        F.col("vec_id").alias("id_a"),
+        "label",
+        F.col("embedding").alias("vec_a"),
+        F.col("nrm").alias("nrm_a"),
+    )
+    b = base.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("label").alias("label_b"),
+        F.col("embedding").alias("vec_b"),
+        F.col("nrm").alias("nrm_b"),
+    )
+    fold = a.join(
+        b,
+        (F.col("label") == F.col("label_b")) & (F.col("id_a") < F.col("id_b")),
+    ).select(
+        "id_a",
+        "id_b",
+        (
+            dot(F.col("vec_a"), F.col("vec_b"))
+            / (F.col("nrm_a") * F.col("nrm_b"))
+        ).alias("c"),
+    )
 
-    old = {(r["id_a"], r["id_b"]): r["c"] for r in old_shape().collect()}
+    old = {(r["id_a"], r["id_b"]): r["c"] for r in fold.collect()}
     new = {
         (r["id_a"], r["id_b"]): r["c"]
         for r in _blocked_pairs(spark, str(tmp_path)).collect()
     }
     assert set(new) == set(old) and len(new) == 13 * 12 // 2
-    diverged = [
-        k
-        for k in old
-        if not (
-            old[k] == new[k]
-            or (old[k] is None and new[k] is None)
-            or (
-                old[k] is not None
-                and new[k] is not None
-                and math.isnan(old[k])
-                and math.isnan(new[k])
-            )
-        )
-    ]
-    assert not diverged, diverged
+    diverged = [k for k in old if not _same_double(old[k], new[k])]
+    assert not diverged, [(k, old[k], new[k]) for k in diverged]
     # the short-equal pair must carry the REAL partial-fold cosine (not
-    # NULL): proves the fallback branch ran, not the gated fast path
+    # NULL)
     assert new[(8, 9)] is not None and not math.isnan(new[(8, 9)])
+
+
+def test_rowpair_scorer_nulls_nan_empty_and_null_query(spark):
+    """The one cosine scorer's NULL contract: NULL for a NULL, ragged or
+    empty row, a NULL query, and wherever the IEEE cosine is NaN (a NaN or
+    NULL element, an all-zero vector); real rows of different lengths in
+    one batch score exactly like cosine()."""
+    from data_engineering_project_spark.operators.similarity import (
+        cosine,
+        score_cosine_pairs_vectorized,
+    )
+
+    q = [0.5, -1.0, 2.0]
+    rows = [
+        (0, [1.0, 2.0, 3.0], q),
+        (1, [3.0, 4.0], [1.0, 0.5]),  # a second length in the same batch
+        (2, [float("nan"), 1.0, 1.0], q),
+        (3, [1.0, None, 1.0], q),
+        (4, [0.0, 0.0, 0.0], q),  # 0/0
+        (5, [], []),
+        (6, [1.0, 2.0, 3.0], None),
+        (7, None, q),
+        (8, [1.0, 2.0], q),  # ragged
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, qe array<double>"
+    ).coalesce(1)
+    got = {
+        r["vec_id"]: r["cosine"]
+        for r in score_cosine_pairs_vectorized(
+            df, vec_col="embedding", query_vec_col="qe"
+        ).collect()
+    }
+    want = {
+        r["vec_id"]: r["c"]
+        for r in df.filter("vec_id < 2")
+        .select("vec_id", cosine(F.col("embedding"), F.col("qe")).alias("c"))
+        .collect()
+    }
+    assert got == {**want, **{i: None for i in range(2, 9)}}
+    assert None not in want.values()
 
 
 def test_lsh_candidate_pairs_matches_expression_form_on_hostile_frame(spark):

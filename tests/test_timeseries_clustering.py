@@ -279,6 +279,58 @@ def test_pq_codes_arrow_matches_expression_on_hostile_frame(spark):
     assert expr == arrow
 
 
+def test_pq_codes_arrow_strict_len_matches_dist2_argmin_on_hostile_frame(
+    spark,
+):
+    """pq_codes_arrow(strict_len=True) is the k-means cell assignment
+    (the build's final step and the IVF append). It must reproduce the
+    whole-vector expression argmin — a (_dist2, cid) struct array_min
+    over the centroids — on every hostile row class: a NULL vector, a
+    short row, an over-long row (the centroid side pads, so it also
+    degrades to the smallest cid) and a NULL element."""
+    from data_engineering_project_spark.operators.clustering import (
+        _dist2,
+        pq_codes_arrow,
+    )
+
+    cents = {0: [0.0, 0.0, 0.0], 1: [10.0, 10.0, 10.0], 2: [20.0, 20.0, 20.0]}
+    rows = [
+        (1, [9, 9, 9]),
+        (2, None),
+        (3, [10, 10]),  # short
+        (4, [10, 10, 10, 10]),  # over-long
+        (5, [10, None, 10]),  # NULL element
+        (6, []),
+        (7, [15, 15, 15]),  # equidistant from cells 1 and 2 -> smaller cid
+        (8, [19, 21, 20]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
+    expr_cell = F.array_min(
+        F.array(
+            *[
+                F.struct(
+                    _dist2(F.col("q"), cents[cid]).alias("d"),
+                    F.lit(cid).alias("cid"),
+                )
+                for cid in sorted(cents)
+            ]
+        )
+    ).getField("cid")
+    expr = sorted(
+        tuple(r) for r in df.select("vec_id", expr_cell.alias("c0")).collect()
+    )
+    arrow = sorted(
+        tuple(r)
+        for r in pq_codes_arrow(
+            df, books=[cents], sub=3, vec_col="q", strict_len=True
+        ).collect()
+    )
+    assert expr == arrow
+    got = dict(arrow)
+    assert got[1] == 1 and got[7] == 1 and got[8] == 2
+    assert got[2] == got[3] == got[4] == got[5] == got[6] == 0
+
+
 def test_lloyd_stats_arrow_matches_expression_stats(spark):
     """The Arrow training-stats kernel must reproduce the old
     posexplode+groupBy round bit-for-bit (sums, counts incl. NULL

@@ -212,3 +212,39 @@ def test_cli_load_end_to_end(spark, tmp_path, capsys):
 
     assert rows[dt.datetime(2022, 5, 26, 20, 0)] == -2  # replaced, not stale
     con.close()
+
+
+def test_cli_load_failed_merge_leaves_dead_letter_unchanged(spark, tmp_path):
+    """The dead-letter upsert is part of the load's one merge transaction:
+    when the merge raises (here an archive table with an incompatible
+    schema), client_report_invalid keeps exactly its previous rows."""
+    import duckdb
+    import pytest
+
+    from data_engineering_project_spark.cli import main
+
+    db = str(tmp_path / "wh.duckdb")
+    csv = tmp_path / "task1_output_2022-05-26.csv"
+    csv.write_text(
+        "date,hour,impression_count,click_count\n"
+        "2022-05-26,11,4,0\n"
+        "2022-05-26,20,-1,0\n"
+    )
+    assert main(["load", "--csv", str(csv), "--db", db]) == 0
+    con = duckdb.connect(db)
+    before = con.execute("SELECT * FROM client_report_invalid").fetchall()
+    con.execute("DROP TABLE client_report_archive")
+    con.execute("CREATE TABLE client_report_archive (unrelated INTEGER)")
+    con.close()
+    assert len(before) == 1
+
+    csv.write_text(
+        "date,hour,impression_count,click_count\n"
+        "2022-05-26,11,4,9\n"
+        "2022-05-26,20,-3,0\n"
+    )
+    with pytest.raises(Exception):
+        main(["load", "--csv", str(csv), "--db", db])
+    con = duckdb.connect(db)
+    assert con.execute("SELECT * FROM client_report_invalid").fetchall() == before
+    con.close()
