@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from data_engineering_project_spark.operators.components import release
 from data_engineering_project_spark.operators.kernels import (
     kernel_columns,
     kernel_input,
@@ -830,6 +831,7 @@ def power_iteration_top_component(
         .distinct()
         .select("pos", F.lit(M).cast("long").alias("vv"))
     )
+    ckpts = []
     for i in range(rounds):
         s = (
             flat.join(F.broadcast(v), "pos")
@@ -870,5 +872,9 @@ def power_iteration_top_component(
             )
         )
         v = v.localCheckpoint(eager=(i == rounds - 1))
+        ckpts.append(v)
+    # the eager final round materialized the lazy ones before it
+    for r in ckpts[:-1]:
+        release(r)
     flat.unpersist()
     return v.select(F.col("pos").alias("dim"), F.col("vv").alias("v_unit"))

@@ -24,43 +24,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _persistent_ids(sc) -> set[int]:
-    """Ids of currently persisted RDDs (localCheckpoint blocks included —
-    they never register with the SQL CacheManager, so DataFrame.unpersist
-    cannot reach them; the SparkContext registry can)."""
-    out: set[int] = set()
-    it = sc._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        out.add(it.next()._1())
-    return out
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint: materialize ``df`` and truncate its lineage.
+    Free the blocks with :func:`release` once no later frame reads them —
+    without that every round's checkpoint lives for the whole session (r13
+    measured the failure: 40+ checkpoint rounds in one session outpaced the
+    ContextCleaner and degraded sym-build 5.8 → 26.7 s)."""
+    return df.localCheckpoint()
 
 
-def _checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """Eager localCheckpoint + the ids of the RDDs it persisted, so an
-    iterative loop can FREE the previous round once the next one
-    materializes. Without this every round's checkpoint blocks live for
-    the whole session (r13 measured the failure: 40+ checkpoint rounds in
-    one session outpaced the ContextCleaner and degraded sym-build 5.8 →
-    26.7 s; ADVICE r13)."""
-    sc = df.sparkSession.sparkContext
-    before = _persistent_ids(sc)
-    out = df.localCheckpoint()
-    return out, _persistent_ids(sc) - before
+def release(df: DataFrame) -> None:
+    """Unpersist the RDD under ``df``'s own ``LogicalRDD`` root (non-blocking).
 
-
-def _unpersist_ids(df: DataFrame, ids: set[int]) -> None:
-    """Unpersist the given RDD ids (non-blocking). Safe ONLY for frames
-    that are never referenced again — a localCheckpoint'd RDD has no
-    lineage to recompute from."""
-    if not ids:
-        return
-    it = (
-        df.sparkSession.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    )
-    while it.hasNext():
-        t = it.next()
-        if t._1() in ids:
-            t._2().unpersist(False)
+    ``df`` must be the frame a ``localCheckpoint`` returned (eager, or lazy
+    and since materialized): its blocks are found through the frame's plan,
+    never through the SparkContext's global RDD registry, so a checkpoint
+    another caller made concurrently is never touched. Any other root —
+    say a projection of the checkpoint — raises ValueError rather than
+    guessing. Safe ONLY for frames never read again: a checkpointed RDD has
+    no lineage to recompute from."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() != "LogicalRDD":
+        raise ValueError(
+            f"release() needs a checkpointed frame, got a {plan.nodeName()} root"
+        )
+    plan.rdd().unpersist(False)
 
 
 # Residual-quotient edges at or below this count are solved driver-side
@@ -139,7 +127,7 @@ def connected_components(
     # near-dup pipeline feeding this operator that is the whole blocked-
     # pairs tree, re-analyzed by Catalyst once per round. Truncating the
     # lineage makes each round's plan O(round), not O(pipeline).
-    sym, sym_ids = _checkpoint_tracked(
+    sym = checkpoint(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
@@ -151,7 +139,7 @@ def connected_components(
     # but keeps the full plan; checkpointing cuts it. On a real
     # cluster prefer setCheckpointDir + checkpoint() so executor loss
     # cannot drop a round.
-    labels, prev_ids = _checkpoint_tracked(
+    labels = checkpoint(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
@@ -162,7 +150,7 @@ def connected_components(
             .groupBy(F.col("a").alias("node2"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels, new_ids = _checkpoint_tracked(
+        new_labels = checkpoint(
             labels.join(
                 neighbor_min, labels["node"] == neighbor_min["node2"], "left"
             ).select(
@@ -183,14 +171,13 @@ def connected_components(
         # the eager checkpoint above materialized this round; the previous
         # round's blocks are now unreachable — free them (ADVICE r13: they
         # otherwise accumulate max_iter frames per call for the session)
-        _unpersist_ids(new_labels, prev_ids)
-        prev_ids = new_ids
-        labels = new_labels.select("node", "component")
+        release(labels)
+        labels = new_labels
         if changed == 0:
             # the returned frame reads only the final round's checkpoint;
             # sym is no longer reachable from it
-            _unpersist_ids(labels, sym_ids)
-            return labels
+            release(sym)
+            return labels.select("node", "component")
     if fallback_to_star:
         # Contract by the labels already learned: every within-cluster
         # edge has collapsed to a self-loop by now, so the quotient holds
@@ -216,35 +203,40 @@ def connected_components(
         # residuals keep the distributed star path.
         q_rows = quotient.take(_UF_MAX_ROWS + 1)
         if len(q_rows) <= _UF_MAX_ROWS:
+            # driver-sized by the gate above: broadcast it back
             mapping = _union_find_min_label([(r["u"], r["v"]) for r in q_rows])
             spark = labels.sparkSession
             dt = labels.schema["component"].dataType
             from pyspark.sql.types import StructField, StructType
 
-            roots = spark.createDataFrame(
-                sorted(mapping.items()),
-                StructType(
-                    [
-                        StructField("component", dt),
-                        StructField("_root", dt),
-                    ]
-                ),
+            roots = F.broadcast(
+                spark.createDataFrame(
+                    sorted(mapping.items()),
+                    StructType(
+                        [
+                            StructField("component", dt),
+                            StructField("_root", dt),
+                        ]
+                    ),
+                )
             )
         else:
+            # one row per quotient node, of any size: the planner picks
+            # the join
             roots = connected_components_star(
                 quotient, src="u", dst="v"
             ).select(
                 F.col("node").alias("component"),
                 F.col("component").alias("_root"),
             )
-        out = labels.join(F.broadcast(roots), "component", "left").select(
+        out = labels.join(roots, "component", "left").select(
             "node",
             F.coalesce(F.col("_root"), F.col("component")).alias("component"),
         )
         # the quotient was consumed eagerly (take / the star's input
         # checkpoint) and `out` reads only the final labels checkpoint +
         # the roots frame — sym is unreachable now
-        _unpersist_ids(out, sym_ids)
+        release(sym)
         return out
     raise RuntimeError(
         f"connected_components: no convergence in {max_iter} rounds — "
@@ -321,7 +313,7 @@ def connected_components_star(
     ``connected_components``; equality on random graphs is
     property-tested in tests/test_components_star.py.
     """
-    e, prev_ids = _checkpoint_tracked(
+    e = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -329,15 +321,14 @@ def connected_components_star(
     if e.isEmpty():
         return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     for _ in range(max_iter):
-        e2, e2_ids = _checkpoint_tracked(_small_star(_large_star(e)))
-        ls, ls_ids = _checkpoint_tracked(_large_star(e2))
+        e2 = checkpoint(_small_star(_large_star(e)))
+        ls = checkpoint(_large_star(e2))
         stable = ls.exceptAll(e2).isEmpty() and e2.exceptAll(ls).isEmpty()
         # ls exists only for the fixed-point check; the previous round's
         # edges are unreachable once e2 materialized — free both (the
         # final e2 stays: the returned frame reads it)
-        _unpersist_ids(e2, ls_ids)
-        _unpersist_ids(e2, prev_ids)
-        prev_ids = e2_ids
+        release(ls)
+        release(e)
         e = e2
         if stable:
             roots = (

@@ -31,8 +31,9 @@ scale. The node spine is likewise persisted pre-partitioned on ``node`` for
 the densification join. Ranks lineage is truncated per round with
 ``localCheckpoint`` (iterative DataFrame loops otherwise double the plan
 every round — see components.py and ROADMAP invariants); the final round
-checkpoints eagerly so the loop-invariant caches can be unpersisted before
-returning (no cache leak across catalog sweeps).
+checkpoints eagerly so the loop-invariant caches and the earlier rounds'
+checkpoints can be freed before returning (no cache leak across catalog
+sweeps).
 """
 
 from __future__ import annotations
@@ -40,6 +41,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from data_engineering_project_spark.operators.components import (
+    checkpoint,
+    release,
+)
 
 #: 1.0 of rank, expressed in integer micro-units.
 UNIT = 1_000_000
@@ -101,6 +107,7 @@ def pagerank_quantized(
     )
     ranks = nodes.select("node", F.lit(unit).cast("long").alias("rank_micro"))
 
+    ckpts = []
     for i in range(iterations):
         contrib = edges_deg.join(
             ranks, edges_deg["src"] == ranks["node"]
@@ -120,15 +127,19 @@ def pagerank_quantized(
         )
         # Truncate lineage: without this the plan doubles per round and
         # Catalyst analysis blows up on deeper iteration counts. The FINAL
-        # round checkpoints eagerly so the loop-invariant caches below can
-        # be released deterministically (catalog sweeps run hundreds of
+        # round checkpoints eagerly, which materializes every earlier
+        # round, so the loop-invariant caches and those rounds can be
+        # released deterministically (catalog sweeps run hundreds of
         # queries in one session — leaked caches accumulate). ``_keep_plan``
         # (test hook) leaves the last round un-checkpointed so plan tests
-        # can assert the Exchange-free edge side; caches are then left to
-        # the caller.
+        # can assert the Exchange-free edge side; caches and rounds are
+        # then left to the caller.
         if _keep_plan and i == iterations - 1:
             return ranks
         ranks = ranks.localCheckpoint(eager=(i == iterations - 1))
+        ckpts.append(ranks)
+    for r in ckpts[:-1]:
+        release(r)
     edges_deg.unpersist()
     nodes.unpersist()
     return ranks
@@ -171,6 +182,7 @@ def bfs_hops(
         StorageLevel.MEMORY_AND_DISK
     )
     dist = sources.select("node", F.lit(0).cast("int").alias("hops"))
+    ckpts = []
     for i in range(rounds):
         stepped = edges_p.join(
             dist, edges_p["src"] == dist["node"]
@@ -184,6 +196,10 @@ def bfs_hops(
             .agg(F.min("hops").cast("int").alias("hops"))
         )
         dist = dist.localCheckpoint(eager=(i == rounds - 1))
+        ckpts.append(dist)
+    # the eager final round materialized the lazy ones before it
+    for r in ckpts[:-1]:
+        release(r)
     edges_p.unpersist()
     return dist
 
@@ -222,6 +238,7 @@ def label_propagation(
     )
     labels = nodes.select("node", F.col("node").alias("label"))
     w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("label"))
+    ckpts = []
     for i in range(rounds):
         neigh = (
             edges_p.join(labels, edges_p["src"] == labels["node"])
@@ -245,6 +262,9 @@ def label_propagation(
             )
         )
         labels = labels.localCheckpoint(eager=(i == rounds - 1))
+        ckpts.append(labels)
+    for r in ckpts[:-1]:
+        release(r)
     edges_p.unpersist()
     nodes.unpersist()
     return labels
@@ -269,53 +289,53 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
     deterministic contract (true core = run until no change, detectable
     by comparing consecutive survivor counts).
 
+    Nodes that appear only as ``dst`` (input not symmetrized) have no
+    degree row; round 0 treats them as removed, the way the restriction
+    loop's dst semi-join drops their edges.
+
     Scale notes: unlike PageRank/BFS the edge set SHRINKS every round, so
-    there is no loop-invariant frame to pin — each round costs one degree
-    aggregation plus two semi-joins, all hash-partitioned on the node key,
-    over a monotonically smaller table. Lineage is truncated per round via
-    ``localCheckpoint`` (the iterative-plan-doubling fix shared by every
-    loop in this module).
+    the loop peels degrees instead of edges: the edge list is
+    checkpointed once, and each round moves only the edges incident to
+    the nodes it removes — one semi-join (an anti-join in round 0) and
+    one degree-delta aggregation, hash-partitioned on the node key.
+    Lineage is truncated per round via ``localCheckpoint`` (the
+    iterative-plan-doubling fix shared by every loop in this module).
     """
     if not {"src", "dst"} <= set(edges.columns):
         raise ValueError("edges must have 'src' and 'dst' columns")
-    from data_engineering_project_spark.operators.components import (
-        _checkpoint_tracked,
-        _unpersist_ids,
-    )
 
     # r14 DELTA PEELING (guide §2.2 shuffle fewer bytes): the old loop
     # re-restricted and re-shuffled the ENTIRE shrinking edge set twice
     # per round (semi-join on src, semi-join on dst) and re-aggregated
     # full degrees; each round now moves only the edges INCIDENT TO
     # FRESHLY-REMOVED nodes: deg_{r+1}(s) = deg_r(s) − #removed
-    # neighbors. Output-identical (A/B'd + property-tested vs the
-    # restriction loop): deg_r equals the degree inside round r's
-    # surviving subgraph by induction, a removed node leaves the degree
-    # table exactly once, and final deg == 0 rows (last-round survivors
-    # whose neighbors all left) are filtered — the old final groupBy
-    # over alive edges never saw them. NULL-key edges reproduce the
-    # semi-join's null semantics: a NULL never matches a join key, so
-    # round 0 drops NULL-src rows from the table and subtracts NULL-dst
-    # edges explicitly; later rounds see no NULL keys.
-    # tools/ab_kcore.py: sf0.5 9.88 → 5.39 s, marginal 7.15 → 2.39 s.
-    edges_ck, edge_ids = _checkpoint_tracked(edges)
-    deg, deg_ids = _checkpoint_tracked(
-        edges_ck.groupBy("src").agg(F.count("*").alias("deg"))
-    )
+    # neighbors. Output-identical (property-tested vs the restriction
+    # loop): deg_r equals the degree inside round r's surviving subgraph
+    # by induction, a removed node leaves the degree table exactly once,
+    # and final deg == 0 rows (last-round survivors whose neighbors all
+    # left) are filtered — the old final groupBy over alive edges never
+    # saw them. Round 0 removes every node outside the survivors, so an
+    # anti-join against them also catches what the semi-joins dropped
+    # without a degree row: NULL dst (a NULL never matches a join key)
+    # and dst-only nodes. NULL src rows leave the degree table in round
+    # 0; later rounds see no NULL keys. The A/B numbers (sf0.5 9.88 →
+    # 5.39 s) are in OPTIMIZATION_r14.md, wave 7.
+    edges_ck = checkpoint(edges)
+    deg = checkpoint(edges_ck.groupBy("src").agg(F.count("*").alias("deg")))
     for i in range(rounds):
-        removed = deg.filter(F.col("deg") < k).select("src")
-        hit = edges_ck.join(
-            removed.withColumnRenamed("src", "dst"), "dst", "left_semi"
-        )
-        if i == 0:
-            hit = hit.unionByName(
-                edges_ck.filter(F.col("dst").isNull())
-            )
-        delta = hit.groupBy("src").agg(F.count("*").alias("drop"))
         survivors = deg.filter(F.col("deg") >= k)
         if i == 0:
             survivors = survivors.filter(F.col("src").isNotNull())
-        new_deg, new_ids = _checkpoint_tracked(
+            hit = edges_ck.join(
+                survivors.select(F.col("src").alias("dst")), "dst", "left_anti"
+            )
+        else:
+            removed = deg.filter(F.col("deg") < k).select(
+                F.col("src").alias("dst")
+            )
+            hit = edges_ck.join(removed, "dst", "left_semi")
+        delta = hit.groupBy("src").agg(F.count("*").alias("drop"))
+        new_deg = checkpoint(
             survivors.join(delta, "src", "left").select(
                 "src",
                 (F.col("deg") - F.coalesce(F.col("drop"), F.lit(0))).alias(
@@ -323,11 +343,10 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
                 ),
             )
         )
-        _unpersist_ids(new_deg, deg_ids)
-        deg_ids = new_ids
+        release(deg)
         deg = new_deg
     out = deg.filter(F.col("deg") > 0).select(
         "src", F.col("deg").cast("bigint").alias("deg")
     )
-    _unpersist_ids(out, edge_ids)
+    release(edges_ck)
     return out

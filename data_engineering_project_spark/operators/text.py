@@ -186,7 +186,8 @@ def bpe_train(words, rounds: int, *, return_symbols: bool = False):
        are resolved by island parity — consecutive match positions are
        grouped (pos - row_number gaps-and-islands) and even offsets win;
     4. renumber positions and iterate, localCheckpoint-truncating lineage
-       per round exactly like the pagerank loop.
+       per round exactly like the pagerank loop, and free the previous
+       round's checkpoint once the next one has materialized.
 
     Scale shape: the corpus is scanned ONCE to build the word-frequency
     table (map-side-combined groupBy; callers cap it to a top-V vocab the
@@ -208,7 +209,12 @@ def bpe_train(words, rounds: int, *, return_symbols: bool = False):
     """
     from pyspark.sql import Window
 
-    sym = (
+    from data_engineering_project_spark.operators.components import (
+        checkpoint,
+        release,
+    )
+
+    sym = checkpoint(
         words.select(
             "word",
             "cnt",
@@ -217,7 +223,6 @@ def bpe_train(words, rounds: int, *, return_symbols: bool = False):
         # Java split keeps a trailing empty string for the zero-width match
         # at end-of-input; DuckDB's string_split does not — drop it
         .where(F.col("sym") != "")
-        .localCheckpoint(eager=True)
     )
 
     merges: list[tuple[int, str, str, int, str]] = []
@@ -270,7 +275,10 @@ def bpe_train(words, rounds: int, *, return_symbols: bool = False):
                 .alias("sym"),
             )
         )
-        sym = rebuilt.localCheckpoint(eager=True)
+        new_sym = checkpoint(rebuilt)
+        release(sym)
+        sym = new_sym
     if return_symbols:
         return merges, sym
+    release(sym)
     return merges

@@ -198,7 +198,7 @@ def compact_parquet_dir(
     files, optionally re-sorting by ``sort_col`` to restore clustering.
 
     The rewrite goes to ``<path>_next`` and is swapped in via the same
-    crash-safe directory-rename protocol as the streaming upsert
+    crash-safe directory-rename protocol as the streaming state tables
     (streaming/pipeline.py:_atomic_swap_write) — a reader never observes a
     partial directory. Returns the new parquet file count.
     """

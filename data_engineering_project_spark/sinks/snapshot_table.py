@@ -1,10 +1,10 @@
 """Snapshot-manifest table format: ACID commits over plain parquet.
 
-The streaming upsert sink (``streaming/pipeline.py:upsert_parquet_batch``)
-rewrites its whole target per batch behind a crash-safe directory swap —
-correct, but O(table) per commit. The production shape is a
-transactional table format (Delta/Iceberg); neither ships in this
-container, so this module implements the core of that public design
+A state table rewritten whole per batch behind a crash-safe directory
+swap (``streaming/pipeline.py:_commit_state``, fine for sketch-sized
+state) costs O(table) per commit. Fact tables need a transactional table
+format (Delta/Iceberg); neither ships with this engine, so this module
+implements the core of that public design
 (snapshot isolation via an immutable-manifest log — Iceberg spec v2,
 Delta PROTOCOL.md) in ~300 lines over plain parquet + POSIX renames:
 

@@ -315,48 +315,6 @@ def psql_report_batch(
     )
 
 
-def upsert_parquet_batch(
-    target_dir: str,
-    key_cols: list[str],
-    *,
-    densify: Callable[[DataFrame], DataFrame] | None = None,
-) -> Callable:
-    """foreachBatch writer: upsert each micro-batch into a parquet target
-    keyed on ``key_cols`` — the reference's archive→delete→insert (T4) for a
-    file warehouse. LEGACY/test path: O(table) rewrite per batch.
-    ``run_incremental_report`` defaults to :func:`snapshot_upsert_batch`
-    (copy-on-write, O(touched files)); this writer remains as the demo of
-    the rename-swap recovery protocol and for flat-parquet targets.
-
-    ``densify`` (e.g. :func:`dense_hourly_grid`) runs on the merged frame
-    before the write, so the target always satisfies the output contract.
-
-    Restart safety: the merged result is fully materialized into
-    ``<target>_next``, then swapped in via directory renames (atomic on one
-    filesystem) — never a second Spark overwrite of the live target, which
-    would leave a truncated target if the writer died mid-copy. A crash
-    between the two renames leaves ``<target>_old`` intact; the next batch
-    restores it before re-merging (foreachBatch re-delivers the batch, so
-    the recovery + re-merge is idempotent). Real fact tables use a
-    transactional table format instead of this rewrite-on-merge (the target
-    here is ≤ dates×24×types rows).
-    """
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        current = _recover_and_read(spark, target_dir)
-        new = batch_df.dropDuplicates(key_cols)
-        if current is not None:
-            keep = current.join(new.select(key_cols), on=key_cols, how="left_anti")
-            merged = keep.unionByName(new)
-        else:
-            merged = new
-        if densify is not None:
-            merged = densify(merged)
-        _atomic_swap_write(merged, target_dir)
-
-    return _write
-
-
 def snapshot_upsert_batch(
     table_dir: str,
     key_cols: list[str],
@@ -367,13 +325,12 @@ def snapshot_upsert_batch(
 ) -> Callable:
     """foreachBatch writer: transactional MERGE of each micro-batch into a
     snapshot-manifest table (sinks/snapshot_table.py) — the production
-    fact-table shape, and the default merge for ``run_incremental_report``.
+    fact-table shape, and the writer ``run_incremental_report`` uses.
 
-    Versus the rewrite-on-merge writer (``upsert_parquet_batch``, kept as a
-    test/demo helper): cost per batch is proportional to the FILES
-    containing updated keys, not the table (copy-on-write), the commit
-    point is one atomic manifest create (no rename window at all), and
-    every prior version stays time-travel readable until vacuumed.
+    Cost per batch is proportional to the FILES containing updated keys,
+    not the table (copy-on-write), the commit point is one atomic manifest
+    create (no rename window at all), and every prior version stays
+    time-travel readable until vacuumed.
 
     Intra-batch duplicate keys are resolved DETERMINISTICALLY: ``seq_col``
     picks the row with the highest sequence/event-time (max_by, as the CDC
@@ -435,7 +392,8 @@ def snapshot_upsert_batch(
 
 
 def _recover_and_read(spark: SparkSession, target_dir: str) -> DataFrame | None:
-    """Crash recovery + read for rewrite-on-merge targets: a writer that died
+    """Crash recovery + read for rewrite-on-merge state tables (the sketch
+    and cohort writers below): a writer that died
     between the two swap renames left ``<target>_old`` holding the data —
     restore it; stale ``_next``/``_old`` from any earlier crash are dead
     weight. Returns the current target frame, or None if the target is
@@ -470,6 +428,43 @@ def _atomic_swap_write(merged: DataFrame, target_dir: str) -> None:
     shutil.rmtree(old_dir, ignore_errors=True)
 
 
+def _commit_state(
+    target_dir: str,
+    new: DataFrame,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> None:
+    """Commit one micro-batch's state rows: recover ``target_dir`` from a
+    crash between the swap renames, fold ``new`` into the current state
+    with ``merge(current, new)`` (``new`` alone when there is no state yet),
+    and swap the result in. Every rewrite-on-merge state table goes
+    through here; the primitives are looked up at call time, so a test can
+    kill the swap."""
+    current = _recover_and_read(new.sparkSession, target_dir)
+    merged = new if current is None else merge(current, new)
+    _atomic_swap_write(merged, target_dir)
+
+
+def _replace_batch(batch_id: int) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """The exactly-once-counter merge, for state that is NOT replay-
+    idempotent (counters: re-adding a crash-replayed batch double-counts).
+    Each batch's deltas carry a ``batch_id`` column; the merge drops every
+    current row of this ``batch_id`` before the union, so a replayed batch
+    overwrites its own contribution instead of accumulating. Readers sum
+    over batch ids, so the state stays a mergeable vector and compacting
+    finalized batch ids is a pure optimization."""
+
+    def merge(current: DataFrame, new: DataFrame) -> DataFrame:
+        return current.filter(F.col("batch_id") != batch_id).unionByName(new)
+
+    return merge
+
+
+def _set_union(current: DataFrame, new: DataFrame) -> DataFrame:
+    """Replay-idempotent merge for set-valued state: re-adding a replayed
+    batch's rows is a no-op."""
+    return current.unionByName(new).distinct()
+
+
 def upsert_cms_sketch(
     target_dir: str,
     *,
@@ -486,30 +481,18 @@ def upsert_cms_sketch(
     billions of long-tail keys.
 
     Counters are NOT re-delivery-idempotent (unlike HLL register maxes),
-    so this uses the same exactly-once-counter protocol as
-    ``upsert_daily_histograms``: each batch's counter deltas are keyed by
-    ``batch_id`` and REPLACE any prior rows for that id before the merge —
-    a crash-replayed batch overwrites its own contribution instead of
-    double-counting. Readers vector-add across batches, so compaction of
-    finalized batch ids is a pure optimization.
+    so each batch's counter deltas commit through the exactly-once-counter
+    merge (:func:`_replace_batch`). Readers vector-add across batches.
     """
     from data_engineering_project_spark.operators.sketch import (
         count_min_sketch,
     )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         new = count_min_sketch(
             batch_df, key_col, depth=depth, width=width, seed=seed
         ).withColumn("batch_id", F.lit(batch_id))
-        current = _recover_and_read(spark, target_dir)
-        if current is not None:
-            merged = current.filter(
-                F.col("batch_id") != batch_id
-            ).unionByName(new)
-        else:
-            merged = new
-        _atomic_swap_write(merged, target_dir)
+        _commit_state(target_dir, new, _replace_batch(batch_id))
 
     return _write
 
@@ -561,21 +544,18 @@ def upsert_daily_sketches(
     day vs per-key state growing with cardinality)."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         new = (
             batch_df.filter(F.col(time_col).isNotNull())
             .groupBy(F.to_date(time_col).alias("day"))
             .agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sk"))
         )
-        current = _recover_and_read(spark, target_dir)
-        merged = (
-            current.unionByName(new)
+        _commit_state(
+            target_dir,
+            new,
+            lambda current, new: current.unionByName(new)
             .groupBy("day")
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            if current is not None
-            else new
+            .agg(F.hll_union_agg("sk").alias("sk")),
         )
-        _atomic_swap_write(merged, target_dir)
 
     return _write
 
@@ -591,18 +571,13 @@ def upsert_daily_histograms(
     histograms — the streaming twin of ``events_value_quantile_rollup``.
 
     Histogram counters are NOT re-delivery-idempotent the way HLL unions
-    are (re-adding a replayed batch double-counts), so this writer uses
-    the standard exactly-once-counter protocol: each batch's deltas are
-    keyed ``(day, bin, batch_id)`` and REPLACE any prior rows for the same
-    ``batch_id`` before the merge — a crash-replayed batch overwrites its
-    own rows instead of accumulating. Readers sum over batches, so the
-    persisted state stays a mergeable sketch (vector add), and a
-    compaction that collapses finalized batch_ids is a pure optimization.
+    are, so each batch's ``(day, bin, batch_id)`` deltas commit through
+    the exactly-once-counter merge (:func:`_replace_batch`). Readers sum
+    over batches, so the persisted state stays a mergeable sketch.
     """
     import math as _math
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         # Non-positive values have no geometric bin (ln is NULL/−inf) — a
         # NULL bin would persist and then sort FIRST in the reader's
         # cumulative window, corrupting every quantile. Route them to a
@@ -622,12 +597,7 @@ def upsert_daily_histograms(
             .agg(F.count("*").alias("n"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        current = _recover_and_read(spark, target_dir)
-        if current is not None:
-            merged = current.filter(F.col("batch_id") != batch_id).unionByName(new)
-        else:
-            merged = new
-        _atomic_swap_write(merged, target_dir)
+        _commit_state(target_dir, new, _replace_batch(batch_id))
 
     return _write
 
@@ -817,20 +787,16 @@ def upsert_ewma_state(
     """foreachBatch writer maintaining per-(type, day) integer-cent daily
     sums — the streaming twin of ``events_value_ewma``'s pre-aggregate.
 
-    Daily sums are additive counters, not re-delivery-idempotent, so the
-    standard exactly-once-counter protocol applies: each batch's partial
-    sums are keyed ``(event_type, day, batch_id)`` and REPLACE any prior
-    rows of the same ``batch_id`` before the merge (a crash-replayed
-    batch overwrites its own rows). The state stays a mergeable vector —
-    readers sum over batch_ids per day — and is bounded by
-    #types x #days x #batches, never by event volume; compaction that
-    collapses finalized batch_ids is a pure optimization."""
+    Daily sums are additive counters, not re-delivery-idempotent, so each
+    batch's ``(event_type, day, batch_id)`` partial sums commit through
+    the exactly-once-counter merge (:func:`_replace_batch`). Readers sum
+    over batch_ids per day; the state is bounded by
+    #types x #days x #batches, never by event volume."""
     from data_engineering_project_spark.functions.scalars import (
         decimal_units,
     )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         new = (
             batch_df.filter(
                 F.col(time_col).isNotNull() & F.col(value_col).isNotNull()
@@ -842,12 +808,7 @@ def upsert_ewma_state(
             .agg(F.sum(decimal_units(F.col(value_col), 100)).alias("x"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        current = _recover_and_read(spark, target_dir)
-        if current is not None:
-            merged = current.filter(F.col("batch_id") != batch_id).unionByName(new)
-        else:
-            merged = new
-        _atomic_swap_write(merged, target_dir)
+        _commit_state(target_dir, new, _replace_batch(batch_id))
 
     return _write
 
@@ -928,7 +889,6 @@ def upsert_cohort_state(
     the grid continuously current instead."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         # ONE pre-aggregate per batch (r14): both state components derive
         # from (user, week) -> min(ts) — first_touch is the min of the
         # per-week mins (exact partition refinement) and user_weeks is the
@@ -942,48 +902,36 @@ def upsert_cohort_state(
         # by default) and its materialization job cost MORE than the scan
         # it saved (tools/ab_cohort_serving.py v1); the checkpoint
         # materializes the post-AQE coalesced partitions eagerly and both
-        # component merges read state-sized blocks. Tracked so the blocks
-        # are FREED per call — a long-running stream would otherwise
-        # accumulate one checkpoint per batch for the session (the r13
-        # localCheckpoint session-degradation failure mode).
+        # component merges read state-sized blocks. The blocks are FREED per
+        # call — a long-running stream would otherwise accumulate one
+        # checkpoint per batch for the session (the r13 localCheckpoint
+        # session-degradation failure mode).
         from data_engineering_project_spark.operators.components import (
-            _checkpoint_tracked,
-            _unpersist_ids,
+            checkpoint,
+            release,
         )
 
-        pre, pre_ids = _checkpoint_tracked(
+        pre = checkpoint(
             batch_df.groupBy(
                 F.col(user_col).alias("user_id"),
                 F.date_trunc("week", F.col(time_col)).alias("active_week"),
             ).agg(F.min(time_col).alias("first_ts"))
         )
         try:
-            ft_new = pre.groupBy("user_id").agg(
-                F.min("first_ts").alias("first_ts")
-            )
-            uw_new = pre.select("user_id", "active_week")
-
-            ft_dir = os.path.join(target_dir, "first_touch")
-            current = _recover_and_read(spark, ft_dir)
-            merged = (
-                ft_new
-                if current is None
-                else current.unionByName(ft_new)
+            _commit_state(
+                os.path.join(target_dir, "first_touch"),
+                pre.groupBy("user_id").agg(F.min("first_ts").alias("first_ts")),
+                lambda current, new: current.unionByName(new)
                 .groupBy("user_id")
-                .agg(F.min("first_ts").alias("first_ts"))
+                .agg(F.min("first_ts").alias("first_ts")),
             )
-            _atomic_swap_write(merged, ft_dir)
-
-            uw_dir = os.path.join(target_dir, "user_weeks")
-            current = _recover_and_read(spark, uw_dir)
-            merged = (
-                uw_new
-                if current is None
-                else current.unionByName(uw_new).distinct()
+            _commit_state(
+                os.path.join(target_dir, "user_weeks"),
+                pre.select("user_id", "active_week"),
+                _set_union,
             )
-            _atomic_swap_write(merged, uw_dir)
         finally:
-            _unpersist_ids(pre, pre_ids)
+            release(pre)
 
     return _write
 
@@ -1039,7 +987,6 @@ def run_incremental_report(
     clean_source: str | None = None,
     archive_dir: str | None = None,
     dense_types: tuple[str, ...] | None = ("impressions", "clicks"),
-    merge: str = "snapshot",
 ) -> None:
     """One incremental run (the cron-tick replacement): process exactly the
     files the checkpoint hasn't seen, upsert hour counts into the target.
@@ -1049,11 +996,10 @@ def run_incremental_report(
     as the batch report — every date in the target carries the full
     hour × type grid, zero-filled. Pass ``None`` for a sparse target.
 
-    ``merge``: ``"snapshot"`` (default) commits each micro-batch as a
-    copy-on-write MERGE into a snapshot-manifest table — O(touched files)
-    per batch, read it back with ``sinks.snapshot_table.read_table``.
-    ``"rewrite"`` is the legacy O(table)-per-batch parquet swap writer,
-    kept for tests/demos of the rename-recovery protocol."""
+    Each micro-batch commits as a copy-on-write MERGE into a
+    snapshot-manifest table (:func:`snapshot_upsert_batch`) — O(touched
+    files) per batch; read it back with
+    ``sinks.snapshot_table.read_table``."""
     events = read_event_stream(
         spark,
         input_dir,
@@ -1063,13 +1009,9 @@ def run_incremental_report(
     )
     counts = hourly_counts_stream(events, watermark=watermark)
     densify = dense_hourly_grid(dense_types) if dense_types else None
-    keys = ["date", "hour", "event_type"]
-    if merge == "snapshot":
-        batch_fn = snapshot_upsert_batch(target_dir, keys, densify=densify)
-    elif merge == "rewrite":
-        batch_fn = upsert_parquet_batch(target_dir, keys, densify=densify)
-    else:
-        raise ValueError(f"merge must be snapshot|rewrite, got {merge!r}")
+    batch_fn = snapshot_upsert_batch(
+        target_dir, ["date", "hour", "event_type"], densify=densify
+    )
     writer = (
         counts.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
@@ -1529,10 +1471,9 @@ def upsert_mg_summaries(
     The batch's dec rides on a null-key sentinel row (the same carrier
     trick as the partition summaries).
 
-    MG counters are NOT re-delivery-idempotent, so this uses the
-    exactly-once-counter protocol shared with ``upsert_cms_sketch``:
-    rows are keyed by ``batch_id`` and a crash-replayed batch REPLACES its
-    own prior contribution instead of double-counting.
+    MG counters are NOT re-delivery-idempotent, so each batch's rows
+    commit through the exactly-once-counter merge
+    (:func:`_replace_batch`).
 
     ``weight_col`` (integer units — snap money to cents upstream) turns
     the maintained summary into WEIGHTED heavy hitters (top spenders):
@@ -1547,7 +1488,6 @@ def upsert_mg_summaries(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        spark = batch_df.sparkSession
         summ = misra_gries_summaries(
             batch_df, key_col, capacity=capacity, weight_col=weight_col
         )
@@ -1597,14 +1537,7 @@ def upsert_mg_summaries(
         new = trimmed.unionByName(sentinel).withColumn(
             "batch_id", F.lit(batch_id)
         )
-        current = _recover_and_read(spark, target_dir)
-        if current is not None:
-            merged_state = current.filter(
-                F.col("batch_id") != batch_id
-            ).unionByName(new)
-        else:
-            merged_state = new
-        _atomic_swap_write(merged_state, target_dir)
+        _commit_state(target_dir, new, _replace_batch(batch_id))
 
     return _write
 
@@ -1772,7 +1705,6 @@ def upsert_bloom_bits(
     )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         new = (
             batch_df.select(
                 F.explode(
@@ -1781,12 +1713,7 @@ def upsert_bloom_bits(
             )
             .distinct()
         )
-        current = _recover_and_read(spark, target_dir)
-        if current is not None:
-            merged = current.unionByName(new).distinct()
-        else:
-            merged = new
-        _atomic_swap_write(merged, target_dir)
+        _commit_state(target_dir, new, _set_union)
 
     return _write
 

@@ -686,7 +686,9 @@ def test_kcore_delta_matches_restriction_loop_on_hostile_frame(spark):
     dst edges (semi-joins never match NULL keys, so such edges vanish in
     round 0 and their endpoints lose that degree), duplicate edges
     (counted per row by both forms), self-loops, and a last-round
-    survivor whose neighbors all leave (absent from both outputs)."""
+    survivor whose neighbors all leave (absent from both outputs), and a
+    node that appears only as dst (no degree row: the dst semi-join drops
+    its edge in round 0, so its clique neighbor loses that degree)."""
     from pyspark.sql import functions as F
 
     from data_engineering_project_spark.operators.graph import kcore_peel
@@ -702,6 +704,8 @@ def test_kcore_delta_matches_restriction_loop_on_hostile_frame(spark):
         (None, 1), (1, None), (None, None),
         (2, 3), (2, 3),
         (7, 7),
+        # hostile: dst-only node 9 hangs off a clique member
+        (1, 9),
     ]
     edf = spark.createDataFrame(edges, "src long, dst long")
     got = {

@@ -42,18 +42,12 @@ def dirs(tmp_path):
 
 
 def _counts(spark, target):
-    """Read the streaming target: a snapshot-manifest table for the default
-    merge path, a flat parquet dir for the legacy rewrite path."""
-    import os
-
+    """Read the streaming target, a snapshot-manifest table."""
     from data_engineering_project_spark.sinks import snapshot_table as st
 
-    if os.path.isdir(os.path.join(target, "_manifests")):
-        df = st.read_table(spark, target)
-    else:
-        df = spark.read.parquet(target)
     return {
-        (r["date"], r["hour"], r["event_type"]): r["n"] for r in df.collect()
+        (r["date"], r["hour"], r["event_type"]): r["n"]
+        for r in st.read_table(spark, target).collect()
     }
 
 
@@ -110,31 +104,37 @@ def test_multi_type_and_late_file(spark, dirs):
 
 
 def test_upsert_recovers_from_crash_between_renames(spark, dirs):
-    """The legacy rewrite path's two-rename swap can die in the middle
-    (target renamed away, replacement not yet in place). The next batch
-    must restore the saved target and re-merge — no rows lost, no partial
-    target read."""
+    """A state table's two-rename swap can die in the middle (target
+    renamed away, replacement not yet in place). The next batch must
+    restore the saved target and re-merge — no rows lost, no partial
+    target read, no ``_next``/``_old`` directory left behind."""
     import os
 
-    _write_events(f"{dirs['in']}/impressions_processed_dk_20220526113212045_1-4_1.parquet", 4)
-    run_incremental_report(
-        spark, dirs["in"], dirs["target"], dirs["ckpt"], SCHEMA, merge="rewrite"
+    from pyspark.sql import functions as F
+
+    from data_engineering_project_spark.streaming.pipeline import (
+        read_daily_distinct_estimates,
+        upsert_daily_sketches,
     )
+
+    def _batch(lo, n, day):
+        return spark.range(lo, lo + n).select(
+            F.col("id").alias("interaction_id"),
+            F.lit(f"2022-05-{day} 11:00:00").cast("timestamp").alias("batch_ts"),
+        )
+
+    write = upsert_daily_sketches(dirs["target"])
+    write(_batch(0, 4, 26), 0)
 
     # simulate the crash window: target moved aside, replacement missing
     os.rename(dirs["target"], dirs["target"] + "_old")
 
-    _write_events(f"{dirs['in']}/clicks_processed_dk_20220526123000000_1-3_1.parquet", 3)
-    run_incremental_report(
-        spark, dirs["in"], dirs["target"], dirs["ckpt"], SCHEMA, merge="rewrite"
-    )
-    _assert_dense(
-        _counts(spark, dirs["target"]),
-        {
-            ("2022-05-26", 11, "impressions"): 4,
-            ("2022-05-26", 12, "clicks"): 3,
-        },
-    )
+    write(_batch(2, 5, 26).unionByName(_batch(0, 3, 27)), 1)
+    got = {
+        str(r["day"]): r["est_distinct"]
+        for r in read_daily_distinct_estimates(spark, dirs["target"]).collect()
+    }
+    assert got == {"2022-05-26": 7, "2022-05-27": 3}
     assert not os.path.isdir(dirs["target"] + "_old")
     assert not os.path.isdir(dirs["target"] + "_next")
 
