@@ -333,7 +333,8 @@ def _dispatch(spark, args) -> int:
         )
         for path in result.csv_paths:
             print(path)
-        n_invalid = result.invalid.count()
+        # counted by the CSV write job itself; no second scan
+        n_invalid = result.dead_letter_rows
         if n_invalid:
             print(f"dead-letter rows: {n_invalid}", file=sys.stderr)
     else:
@@ -417,6 +418,15 @@ def _run_load(spark, args) -> None:
     # re-delivering a file whose boundary rows became invalid still replaces
     # everything the previous delivery wrote
     batch_pdf = prepared.toPandas()
+    # a row without a datetime key cannot be archived, replaced or
+    # dead-lettered (both tables key on datetime): refuse the delivery
+    # before any table is touched
+    n_unkeyed = int(batch_pdf["datetime"].isna().sum())
+    if n_unkeyed:
+        raise ValueError(
+            f"{n_unkeyed} row(s) in {args.csv} have no date or hour; "
+            "nothing loaded"
+        )
     invalid_pdf = split.invalid.select(
         "datetime",
         "impression_count",

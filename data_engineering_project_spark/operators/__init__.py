@@ -1,7 +1,5 @@
 from data_engineering_project_spark.operators.report import (  # noqa: F401
     combine_hourly_reports,
-    densify_hours,
     filter_equals,
-    hour_spine,
     hourly_type_counts,
 )

@@ -3,18 +3,23 @@
 Pipeline (reference ``src/Task1/data_processing.py``):
   filter on a (possibly nested) column == literal   (:139-141)
   → count events per (date, hour, type)             (:268-288)
-  → densify to all 24 hours via a generated spine   (:306-338)
+  → densify to all 24 hours per date                (:306-338)
   → zero-fill missing buckets                       (:338)
-  → fixed column order + sort                       (:359-362)
+  → fixed column order                              (:359-362)
 
 Differences from the reference, on purpose:
-- ONE plan across all dates (no per-date driver loop): the spine is
-  (distinct dates) × (0..23), so a single job densifies every date.
+- ONE plan across all dates (no per-date driver loop): each date's ≤24
+  sparse hourly rows fold into an hour→counts map that explodes over
+  0..23, so a single job densifies every date without a spine join.
 - No eager count/collect logging (the reference re-executes lineage ≥8 times
   per date, ``:134-136,144,252,268-291``). Use ``df.observe`` for metrics.
-- Both densification-join sides are tiny post-agg (dates × 24 rows); the
-  counts side is explicitly broadcast (build-right — the only supported
-  build side for a left-outer broadcast join) so the join never shuffles.
+
+This module, ``sources/events.py`` (the filename projection) and
+``functions/scalars.py:compose_datetime`` (the ``date + hour`` warehouse
+key) hold the report contract the batch run, the streaming writers and the
+warehouse load share: :data:`TYPE_COLUMNS` names the counted event types
+and their report columns, and :func:`combine_hourly_reports` is the
+24-rows-per-date grid.
 """
 
 from __future__ import annotations
@@ -23,6 +28,19 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: event type (from the file name) → its count column in the daily report
+#: and the warehouse table (reference ``src/Task1/data_processing.py:359``)
+TYPE_COLUMNS: dict[str, str] = {
+    "impressions": "impression_count",
+    "clicks": "click_count",
+}
+
+
+def day_hours() -> Column:
+    """The hour grid: one row per hour 0..23 (an ``explode``, aliased
+    ``hour``) — every date of a report gets exactly these 24 rows."""
+    return F.explode(F.sequence(F.lit(0), F.lit(23))).alias("hour")
 
 
 def filter_equals(df: DataFrame, column: str, value) -> DataFrame:
@@ -57,46 +75,6 @@ def hourly_type_counts(
     return df.groupBy(date_col.alias("date"), hour_col.alias("hour")).agg(*aggs)
 
 
-def hour_spine(df_dates: DataFrame, date_col: str = "date") -> DataFrame:
-    """(distinct dates) × (hours 0..23) dimension — the densification spine
-    (reference builds a bare ``spark.range(0,24)`` per date,
-    ``src/Task1/data_processing.py:306-308``; here one spine covers all dates).
-    """
-    dates = df_dates.select(F.col(date_col).alias("date")).distinct()
-    hours = F.explode(F.sequence(F.lit(0), F.lit(23))).alias("hour")
-    return dates.select("date", hours)
-
-
-def densify_hours(
-    counts: DataFrame,
-    *,
-    fill_cols: Sequence[str],
-    date_col: str = "date",
-    hour_col: str = "hour",
-    spine: DataFrame | None = None,
-) -> DataFrame:
-    """LEFT JOIN a dense (date × 24h) spine against sparse hourly counts and
-    zero-fill — guarantees exactly 24 rows per date even for all-zero dates
-    (reference ``src/Task1/data_processing.py:318-338``).
-
-    The counts side post-aggregation is small relative to the raw events
-    (≤ 24 rows/date), and the spine is exactly dates×24, so this join is
-    broadcast-able at any raw-data scale. The hint goes on the COUNTS side:
-    Spark only supports build-right for a left-outer BroadcastHashJoin, so a
-    hint on the spine (the left side) is silently dropped and the join would
-    shuffle both (small) sides instead.
-    """
-    if spine is None:
-        spine = hour_spine(counts.select(F.col(date_col).alias("date")))
-    joined = spine.join(
-        F.broadcast(counts),
-        on=[spine["date"] == counts[date_col], spine["hour"] == counts[hour_col]],
-        how="left",
-    )
-    out = joined.select(spine["date"], spine["hour"], *fill_cols)
-    return out.na.fill(0, list(fill_cols))
-
-
 def combine_hourly_reports(
     df: DataFrame,
     *,
@@ -104,7 +82,6 @@ def combine_hourly_reports(
     hour_col: Column | str,
     type_col: Column | str,
     types: Sequence[str],
-    sort: bool = False,
 ) -> DataFrame:
     """Full report: counts → densify → zero-fill → ordered columns.
 
@@ -112,11 +89,10 @@ def combine_hourly_reports(
     (``date, hour, <type>_count...``; exactly 24 rows per observed date,
     golden example ``output/task1_output_2022-05-26.csv``).
 
-    ``sort`` is OFF by default: a global orderBy adds a range-partition
-    exchange + sort stage that neither consumer needs — the CSV sink orders
-    rows per date-partition itself (``sinks/csv_sink.py:36``), and
-    relational consumers treat row order as meaningless. Pass ``sort=True``
-    only when handing the frame directly to something order-sensitive.
+    Rows come back unordered: a global orderBy would add a range-partition
+    exchange + sort stage that no consumer needs — the CSV sink orders rows
+    per date-partition itself, and relational consumers treat row order as
+    meaningless.
     """
     counts = hourly_type_counts(
         df, date_col=date_col, hour_col=hour_col, type_col=type_col, types=types
@@ -135,12 +111,8 @@ def combine_hourly_reports(
             F.collect_list(F.struct("hour", F.struct(*fill)))
         ).alias("_by_hour")
     )
-    exploded = per_date.select(
-        "date",
-        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("hour"),
-        "_by_hour",
-    )
-    out = exploded.select(
+    exploded = per_date.select("date", day_hours(), "_by_hour")
+    return exploded.select(
         "date",
         "hour",
         *[
@@ -148,4 +120,3 @@ def combine_hourly_reports(
             for c in fill
         ],
     )
-    return out.orderBy("date", "hour") if sort else out

@@ -23,7 +23,6 @@ from data_engineering_project_spark.functions.scalars import (
 from data_engineering_project_spark.operators.hints import broadcast_if_small
 from data_engineering_project_spark.operators.report import (
     combine_hourly_reports,
-    densify_hours,
     hourly_type_counts,
 )
 from data_engineering_project_spark.plans.catalog import register

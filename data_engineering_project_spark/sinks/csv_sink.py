@@ -22,29 +22,24 @@ import shutil
 from pyspark.sql import DataFrame
 
 
-def write_daily_csv(
-    report: DataFrame,
-    out_dir: str,
-    *,
-    date_col: str = "date",
-    filename_pattern: str = "task1_output_{date}.csv",
-) -> list[str]:
-    """Write one headered CSV per distinct date; returns the paths written."""
+def write_daily_csv(report: DataFrame, out_dir: str) -> list[str]:
+    """Write one headered CSV per distinct ``date``; returns the paths
+    written."""
     staging = os.path.join(out_dir, "_staging")
     (
-        report.repartition(date_col)
-        .sortWithinPartitions("hour" if "hour" in report.columns else date_col)
+        report.repartition("date")
+        .sortWithinPartitions("hour")
         .write.option("header", True)
-        .partitionBy(date_col)
+        .partitionBy("date")
         .mode("overwrite")
         .csv(staging)
     )
 
     written: list[str] = []
-    for part_dir in sorted(glob.glob(os.path.join(staging, f"{date_col}=*"))):
+    for part_dir in sorted(glob.glob(os.path.join(staging, "date=*"))):
         date_val = os.path.basename(part_dir).split("=", 1)[1]
         parts = sorted(glob.glob(os.path.join(part_dir, "part-*.csv")))
-        target = os.path.join(out_dir, filename_pattern.format(date=date_val))
+        target = os.path.join(out_dir, f"task1_output_{date_val}.csv")
         if len(parts) == 1:
             shutil.move(parts[0], target)
         else:  # >1 part for a date (never at ≤24 rows/date, but stay correct)
@@ -53,13 +48,13 @@ def write_daily_csv(
                     with open(p) as f:
                         lines = f.readlines()
                     out.writelines(lines if i == 0 else lines[1:])
-        _reinsert_date_column(target, date_col, date_val)
+        _reinsert_date_column(target, date_val)
         written.append(target)
     shutil.rmtree(staging, ignore_errors=True)
     return written
 
 
-def _reinsert_date_column(path: str, date_col: str, date_val: str) -> None:
+def _reinsert_date_column(path: str, date_val: str) -> None:
     """partitionBy drops the partition column from the file body; the
     reference's golden CSVs carry the date as the first column
     (``output/task1_output_2022-05-26.csv``) — restore it."""
@@ -67,7 +62,7 @@ def _reinsert_date_column(path: str, date_col: str, date_val: str) -> None:
         lines = f.read().splitlines()
     if not lines:
         return
-    out = [f"{date_col},{lines[0]}"]
+    out = [f"date,{lines[0]}"]
     out += [f"{date_val},{line}" for line in lines[1:]]
     with open(path, "w") as f:
         f.write("\n".join(out) + "\n")

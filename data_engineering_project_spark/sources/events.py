@@ -9,10 +9,17 @@ and ``src/utils.py:26-43``).
 The reference does this with a *driver-side* ``os.listdir`` loop that groups
 files by date and runs one Spark job per (date, type). Here the whole thing is
 ONE declarative plan: read every file, derive ``event_type`` / ``batch_ts`` /
-``event_date`` / ``event_hour`` columns from ``input_file_name()``, and let
+``event_date`` / ``event_hour`` columns from the file path, and let
 downstream groupBys handle all dates at once. At 100 TB this matters: no
 driver-memory manifest, no per-date job scheduling overhead, and Catalyst can
 pipeline the filename projection into the scan.
+
+The path is read from the file source's hidden ``_metadata.file_path``
+column, not from Spark's ``input_file_name`` function: the metadata column
+resolves on the scan itself, so it works for batch and streaming file
+sources alike and stays correct once the plan grows joins (SURVEY.md §7.3
+hard item 1). The batch run and the streaming twin both project through
+:func:`with_filename_event_time` — there is one filename projection.
 """
 
 from __future__ import annotations
@@ -45,8 +52,9 @@ def filename_event_type(file_col: Column) -> Column:
 
 def with_filename_event_time(df: DataFrame) -> DataFrame:
     """Attach ``source_file``, ``event_type``, ``batch_ts``, ``event_date``,
-    ``event_hour`` columns derived from the input file name."""
-    file_col = F.input_file_name()
+    ``event_hour`` columns derived from the file path of a batch or
+    streaming file-source frame."""
+    file_col = F.col("_metadata.file_path")
     batch_ts = filename_batch_ts(file_col)
     return (
         df.withColumn("source_file", file_col)
@@ -61,19 +69,19 @@ def read_event_files(
     spark: SparkSession,
     input_dir: str,
     *,
-    path_glob: str = "*.parquet",
     schema=None,
 ) -> DataFrame:
     """Scan an event landing directory (impressions + clicks mixed) into one
     DataFrame with filename-derived metadata columns.
 
-    ``recursiveFileLookup`` + ``pathGlobFilter`` replace the reference's
-    ``os.listdir`` manifest (``src/Task1/data_processing.py:43-67``). Supplying
-    a pinned ``schema`` makes bad files fail fast and skips schema inference's
-    extra listing pass — at 100 TB, always pin the schema.
+    ``recursiveFileLookup`` + a ``*.parquet`` ``pathGlobFilter`` replace the
+    reference's ``os.listdir`` manifest
+    (``src/Task1/data_processing.py:43-67``). Supplying a pinned ``schema``
+    makes bad files fail fast and skips schema inference's extra listing
+    pass — at 100 TB, always pin the schema.
     """
     reader = (
-        spark.read.option("pathGlobFilter", path_glob)
+        spark.read.option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .option("mergeSchema", "false")
     )

@@ -24,10 +24,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineering_project_spark.sources.events import (
-    filename_batch_ts,
-    filename_event_type,
-)
+from data_engineering_project_spark.functions.scalars import compose_datetime
+from data_engineering_project_spark.operators.report import TYPE_COLUMNS, day_hours
+from data_engineering_project_spark.sources.events import with_filename_event_time
 
 #: Histogram bin for values ≤ 0 (no geometric bin exists): sorts before
 #: every real bin and pow(base, ·) underflows to 0.0 in the estimator.
@@ -39,21 +38,19 @@ def read_event_stream(
     input_dir: str,
     schema,
     *,
-    path_glob: str = "*.parquet",
     max_files_per_trigger: int | None = None,
     clean_source: str | None = None,
     archive_dir: str | None = None,
 ) -> DataFrame:
-    """File-source stream with filename-derived event metadata.
-
-    Streaming uses the ``_metadata.file_path`` column (not
-    ``input_file_name()``, which is unreliable once the plan grows joins —
-    SURVEY.md §7.3 hard item 1). ``cleanSource='archive'|'delete'`` gives the
-    reference's consume-the-input behavior without losing replayability.
+    """File-source stream of the ``*.parquet`` files under ``input_dir``
+    with the batch run's filename-derived columns
+    (``sources/events.py:with_filename_event_time``).
+    ``cleanSource='archive'|'delete'`` gives the reference's
+    consume-the-input behavior without losing replayability.
     """
     reader = (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", path_glob)
+        .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )
     if max_files_per_trigger:
@@ -62,14 +59,7 @@ def read_event_stream(
         reader = reader.option("cleanSource", clean_source)
         if archive_dir:
             reader = reader.option("sourceArchiveDir", archive_dir)
-    df = reader.parquet(input_dir)
-    file_col = F.col("_metadata.file_path")
-    batch_ts = filename_batch_ts(file_col)
-    return (
-        df.withColumn("source_file", file_col)
-        .withColumn("event_type", filename_event_type(file_col))
-        .withColumn("batch_ts", batch_ts)
-    )
+    return with_filename_event_time(reader.parquet(input_dir))
 
 
 def hourly_counts_stream(
@@ -99,37 +89,25 @@ def hourly_counts_stream(
     )
 
 
-def dense_hourly_grid(
-    types: tuple[str, ...],
-    *,
-    date_col: str = "date",
-    hour_col: str = "hour",
-    type_col: str = "event_type",
-    fill_cols: tuple[str, ...] = ("n",),
-) -> Callable[[DataFrame], DataFrame]:
-    """Post-merge densifier for the streaming report target: every date
-    present in the target gets the full (24 hours × event types) grid,
-    zero-filled — the reference's output contract is exactly 24 rows/date
-    even for silent hours (``src/Task1/data_processing.py:306-338``), and
-    round 1 only applied it on the batch path (SURVEY T6 gap). The spine is
-    dates × 24 × |types| rows (trivially broadcastable at any scale)."""
-
-    def _densify(merged: DataFrame) -> DataFrame:
-        spark = merged.sparkSession
-        dates = merged.select(date_col).distinct()
-        spine = dates.crossJoin(
-            spark.createDataFrame([(t,) for t in types], f"{type_col} string")
-        ).select(
-            date_col,
-            F.explode(F.sequence(F.lit(0), F.lit(23))).alias(hour_col),
-            type_col,
-        )
-        dense = spine.join(
-            F.broadcast(merged), on=[date_col, hour_col, type_col], how="left"
-        )
-        return dense.na.fill(0, list(fill_cols))
-
-    return _densify
+def dense_hourly_grid(batch: DataFrame) -> DataFrame:
+    """Zero rows completing the streaming report target's dense grid: every
+    (hour, event type) key of the batch's dates that the batch does not
+    carry, with ``n = 0`` — the same 24-rows/date contract as the batch
+    report (``src/Task1/data_processing.py:306-338``). The spine is
+    dates × 24 × |types| rows, anti-joined with the batch's keys."""
+    keys = ["date", "hour", "event_type"]
+    types = batch.sparkSession.createDataFrame(
+        [(t,) for t in TYPE_COLUMNS], "event_type string"
+    )
+    spine = (
+        batch.select("date")
+        .distinct()
+        .crossJoin(types)
+        .select("date", day_hours(), "event_type")
+    )
+    return spine.join(batch.select(*keys), keys, "left_anti").withColumn(
+        "n", F.lit(0).cast("long")
+    )
 
 
 def jdbc_report_batch(
@@ -138,8 +116,6 @@ def jdbc_report_batch(
     *,
     properties: dict[str, str] | None = None,
     connection_factory=None,
-    impression_type: str = "impressions",
-    click_type: str = "clicks",
 ) -> Callable:
     """foreachBatch writer: land each micro-batch in the warehouse through
     the SAME staging + archive→delete→insert protocol as the batch load
@@ -185,20 +161,17 @@ def jdbc_report_batch(
             connection_factory=connection_factory,
         )
 
-    return _report_merge_writer(
-        spec, _read_existing, _load, impression_type, click_type
-    )
+    return _report_merge_writer(spec, _read_existing, _load)
 
 
 def _report_merge_writer(
     spec,
     read_existing: Callable,
     load: Callable,
-    impression_type: str,
-    click_type: str,
 ) -> Callable:
     """Shared core of the streaming report writers: pivot the batch's
-    revised (date, hour, type) counts to client_report shape, coalesce
+    revised (date, hour, type) counts to client_report shape
+    (:data:`TYPE_COLUMNS`, keyed on :func:`compose_datetime`), coalesce
     un-revised type columns against the target's existing window rows
     (``read_existing(spark, lo, hi) -> DataFrame`` with datetime /
     impression_count / click_count), then hand the finished report to
@@ -207,29 +180,17 @@ def _report_merge_writer(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         pivot = (
-            batch_df.filter(
-                F.col("event_type").isin(impression_type, click_type)
-            )
-            .groupBy(
-                F.to_timestamp(
-                    F.concat_ws(
-                        " ",
-                        F.col("date"),
-                        F.format_string("%02d:00:00", F.col("hour")),
-                    )
-                ).alias("datetime")
-            )
+            batch_df.filter(F.col("event_type").isin(*TYPE_COLUMNS))
+            .groupBy(compose_datetime("date", "hour").alias("datetime"))
             .agg(
                 # NULL (not 0) when this batch carries no rows for the type:
                 # "not revised" must stay distinguishable from "zero"
-                F.sum(
-                    F.when(F.col("event_type") == impression_type, F.col("n"))
-                )
-                .cast("long")
-                .alias("impression_count"),
-                F.sum(F.when(F.col("event_type") == click_type, F.col("n")))
-                .cast("long")
-                .alias("click_count"),
+                *[
+                    F.sum(F.when(F.col("event_type") == t, F.col("n")))
+                    .cast("long")
+                    .alias(c)
+                    for t, c in TYPE_COLUMNS.items()
+                ]
             )
         )
         window = pivot.agg(
@@ -238,18 +199,14 @@ def _report_merge_writer(
         if window["lo"] is None:
             return
         existing = read_existing(spark, window["lo"], window["hi"]).select(
-            "datetime",
-            F.col("impression_count").alias("_cur_imp"),
-            F.col("click_count").alias("_cur_clk"),
+            "datetime", *[F.col(c).alias(f"_cur_{c}") for c in TYPE_COLUMNS.values()]
         )
         report = pivot.join(existing, "datetime", "left").select(
             "datetime",
-            F.coalesce("impression_count", "_cur_imp", F.lit(0))
-            .cast("long")
-            .alias("impression_count"),
-            F.coalesce("click_count", "_cur_clk", F.lit(0))
-            .cast("long")
-            .alias("click_count"),
+            *[
+                F.coalesce(c, f"_cur_{c}", F.lit(0)).cast("long").alias(c)
+                for c in TYPE_COLUMNS.values()
+            ],
         )
         if "audit_loaded_datetime" in spec.columns:
             report = report.withColumn(
@@ -265,8 +222,6 @@ def psql_report_batch(
     session_factory: Callable,
     *,
     scratch_dir: str,
-    impression_type: str = "impressions",
-    click_type: str = "clicks",
 ) -> Callable:
     """foreachBatch writer landing each micro-batch in a LIVE Postgres
     through the psql COPY transport (sinks/psql_transport.py) — the
@@ -310,9 +265,7 @@ def psql_report_batch(
         finally:
             session.close()
 
-    return _report_merge_writer(
-        spec, _read_existing, _load, impression_type, click_type
-    )
+    return _report_merge_writer(spec, _read_existing, _load)
 
 
 def snapshot_upsert_batch(
@@ -339,11 +292,12 @@ def snapshot_upsert_batch(
     — ``dropDuplicates`` would keep an arbitrary row and break that.
 
     ``densify`` (e.g. :func:`dense_hourly_grid`) enforces the dense-grid
-    output contract incrementally: the batch's dates are zero-filled, but a
-    zero row is only INSERTED where the key is absent from both the batch
-    and the table (a blanket zero-fill would overwrite counts from earlier
-    batches). The existing-key probe reads only manifest-pruned files for
-    the batch's ``date_col`` range — O(touched files), like the merge.
+    output contract incrementally: it returns the zero rows for keys the
+    batch lacks, and a zero row is only INSERTED where the key is absent
+    from the table too (a blanket zero-fill would overwrite counts from
+    earlier batches). The existing-key probe reads only manifest-pruned
+    files for the batch's ``date_col`` range — O(touched files), like the
+    merge.
 
     Restart safety: foreachBatch re-delivers a batch after a crash; the
     merge is idempotent at the row level, so the re-run commits a new
@@ -373,8 +327,7 @@ def snapshot_upsert_batch(
         spark = batch_df.sparkSession
         new = _dedup(batch_df)
         if densify is not None:
-            dense = densify(new)
-            zeros = dense.join(new.select(*key_cols), key_cols, "left_anti")
+            zeros = densify(new)
             if st.current_version(table_dir) is not None:
                 bounds = new.agg(
                     F.min(date_col).alias("lo"), F.max(date_col).alias("hi")
@@ -986,15 +939,14 @@ def run_incremental_report(
     available_now: bool = True,
     clean_source: str | None = None,
     archive_dir: str | None = None,
-    dense_types: tuple[str, ...] | None = ("impressions", "clicks"),
 ) -> None:
     """One incremental run (the cron-tick replacement): process exactly the
     files the checkpoint hasn't seen, upsert hour counts into the target.
     Blocks until the availableNow trigger drains.
 
-    ``dense_types``: streaming output meets the same 24-rows/date contract
-    as the batch report — every date in the target carries the full
-    hour × type grid, zero-filled. Pass ``None`` for a sparse target.
+    The target meets the same 24-rows/date contract as the batch report:
+    every date in it carries the full hour × type grid, zero-filled
+    (:func:`dense_hourly_grid`).
 
     Each micro-batch commits as a copy-on-write MERGE into a
     snapshot-manifest table (:func:`snapshot_upsert_batch`) — O(touched
@@ -1008,9 +960,8 @@ def run_incremental_report(
         archive_dir=archive_dir,
     )
     counts = hourly_counts_stream(events, watermark=watermark)
-    densify = dense_hourly_grid(dense_types) if dense_types else None
     batch_fn = snapshot_upsert_batch(
-        target_dir, ["date", "hour", "event_type"], densify=densify
+        target_dir, ["date", "hour", "event_type"], densify=dense_hourly_grid
     )
     writer = (
         counts.writeStream.outputMode("update")

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_engineering_project_spark import quality as Q
+from data_engineering_project_spark.functions.scalars import compose_datetime
 
 REPORT_CSV_SCHEMA = T.StructType(
     [
@@ -63,14 +64,10 @@ def read_report_csv(spark: SparkSession, path: str) -> DataFrame:
 def prepare_report(df: DataFrame) -> DataFrame:
     """date + hour → datetime key, casts, audit timestamp, load order
     (reference prepare_data, warehouse.py:331-389 — minus the row-wise
-    .apply; the composition is one vectorized expression, F9)."""
-    dt = F.to_timestamp(
-        F.concat_ws(
-            " ", F.col("date"), F.format_string("%02d:00:00", F.col("hour"))
-        )
-    )
+    .apply; the composition is one vectorized expression, F9). A NULL date
+    or hour keys to a NULL datetime."""
     return df.select(
-        dt.alias("datetime"),
+        compose_datetime("date", "hour").alias("datetime"),
         F.col("impression_count").cast("long"),
         F.col("click_count").cast("long"),
         F.current_timestamp().alias("audit_loaded_datetime"),

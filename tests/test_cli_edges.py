@@ -143,3 +143,22 @@ def test_tag_operational_errors_exit_2(spark, tmp_path, capsys):
     st.write_table(spark.createDataFrame([(1,)], "k int"), tb)
     assert main(["tag", tb, "--delete", "missing-tag"]) == 2
     assert capsys.readouterr().err.strip()
+
+
+def test_load_refuses_rows_without_date_or_hour(spark, tmp_path, capsys):
+    """A report row with an empty ``hour`` or ``date`` has no datetime key.
+    `load` exits 2 with one line and creates no warehouse file — it neither
+    aborts mid-merge nor keys the dateless row on today's date."""
+    csv = tmp_path / "task1_output_2022-05-26.csv"
+    csv.write_text(
+        "date,hour,impression_count,click_count\n"
+        "2022-05-26,11,4,0\n"
+        "2022-05-26,,10,0\n"
+        ",3,7,1\n"
+    )
+    db = tmp_path / "wh.duckdb"
+    rc = main(["load", "--csv", str(csv), "--db", str(db)])
+    assert rc == 2
+    err = capsys.readouterr().err.strip()
+    assert len(err.splitlines()) == 1 and "2 row(s)" in err
+    assert not db.exists()

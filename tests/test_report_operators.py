@@ -11,10 +11,7 @@ from pyspark.sql import types as T
 
 from data_engineering_project_spark.operators.report import (
     combine_hourly_reports,
-    densify_hours,
     filter_equals,
-    hour_spine,
-    hourly_type_counts,
 )
 
 EVENT_SCHEMA = T.StructType(
@@ -81,22 +78,6 @@ def test_empty_input_empty_report(spark):
     # no observed dates → no spine rows (per-date zero grids require the
     # date to appear in the data or a supplied spine)
     assert out == []
-
-
-def test_explicit_spine_yields_all_zero_date(spark):
-    counts = hourly_type_counts(
-        _events(spark, []),
-        date_col="d",
-        hour_col="h",
-        type_col="etype",
-        types=("impressions",),
-    )
-    spine = hour_spine(_events(spark, [(D1, 0, "x")]), date_col="d")
-    dense = densify_hours(
-        counts, fill_cols=["impressions_count"], spine=spine
-    ).collect()
-    assert len(dense) == 24
-    assert all(r["impressions_count"] == 0 for r in dense)
 
 
 def test_filter_equals_nested(spark):
