@@ -11,15 +11,16 @@ exist:
   → every vector assigned to its cell → ``(vec_id, cell, q)`` written
   range-partitioned by ``cell`` into a snapshot table with per-file
   ``cell`` min/max stats, so each data file covers one (or few) cells and
-  ``read_pruned(cell, c, c)`` touches only that cell's files — partition
+  a probe of cell ``c`` touches only that cell's files — partition
   pruning from footer stats, no metastore. The k centroids persist in a
   tiny side table (``<table>__centroids``, k rows), overwritten atomically
   with each rebuild.
 - **query_ivf_index**: rank cells driver-side against the k stored
   centroids (k×dim floats — the same bounded state MLlib keeps), read ONLY
-  the ``nprobe`` winning cells via manifest pruning, score in-cell with the
+  the ``nprobe`` winning cells via manifest pruning (one scan over their
+  files, ``snapshot_table.read_where_in``), score in-cell with the
   Arrow-vectorized cosine scorer. Cost per query: k-row centroid read +
-  nprobe cell file scans; the corpus is never touched.
+  one scan of the probed cells' files; the corpus is never touched.
 - **append_to_ivf_index**: assign new vectors with the SAME stored
   centroids (an IVF index absorbs inserts without refit; recall decays only
   as the data distribution drifts — rebuild cadence is the operational
@@ -48,6 +49,7 @@ from data_engineering_project_spark.operators.similarity import (
     score_cosine_pairs_vectorized,
 )
 from data_engineering_project_spark.sinks import snapshot_table as snap
+from data_engineering_project_spark.sources.tables import local_frame
 
 
 def _centroid_table(table: str) -> str:
@@ -90,7 +92,7 @@ def build_ivf_index(
         if assigned is None:
             raise ValueError("build_ivf_index: empty embedding frame")
         rows = [(cid, centroids[cid]) for cid in sorted(centroids)]
-        cdf = spark.createDataFrame(rows, "cell int, centroid array<double>")
+        cdf = local_frame(spark, rows, "cell int, centroid array<double>")
         # data files range-partitioned by cell: one file ≈ one cell, so the
         # manifest's per-file [min,max] prunes a probe to its cell's files
         data = assigned.select(
@@ -139,15 +141,7 @@ def query_ivf_index(
         for cid, c in centroids.items()
     )
     probed = [cid for _, cid in ranked[:nprobe]]
-    parts = [
-        snap.read_pruned(spark, table, "cell", c, c, tag=tag).filter(
-            F.col("cell") == c
-        )
-        for c in probed
-    ]
-    cells = parts[0]
-    for p in parts[1:]:
-        cells = cells.unionByName(p)
+    cells = snap.read_where_in(spark, table, "cell", probed, tag=tag)
     with_q = cells.withColumn("qe", F.array(*[F.lit(v) for v in qq]))
     scored = score_cosine_pairs_vectorized(
         with_q, vec_col="q", query_vec_col="qe", keep_cols=("vec_id", "cell")
@@ -294,7 +288,8 @@ def ivf_index_recall(
     # An empty index yields an empty exact top-k for every query: recall is
     # undefined — surface NULL for the monitor rather than ZeroDivisionError.
     recall = round(hits / total, 6) if total else None
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(query_vecs), k, nprobe, recall)],
         "n_queries int, k int, nprobe int, recall double",
     )
@@ -359,7 +354,8 @@ def build_ivfpq_index(
             cent_int.setdefault(r["cell"], [0] * dim)[r["dim"]] = int(
                 _math.floor(r["s"] / r["n"] + 0.5)
             )
-        cents_df = spark.createDataFrame(
+        cents_df = local_frame(
+            spark,
             [(c, v, scale, sub) for c, v in sorted(cent_int.items())],
             "cell int, cvec array<bigint>, scale int, sub int",
         )
@@ -377,9 +373,12 @@ def build_ivfpq_index(
             books = [{} for _ in range(n_sub)]
         # codes via the Arrow kernel (r14): same values as the expression
         # argmins, one vectorized map stage instead of n_sub interpreted
-        # HOF projections (see clustering.pq_codes_arrow)
+        # HOF projections (see clustering.pq_codes_arrow). The range
+        # partitioning by cell comes first: its bound sampler then reads
+        # the persisted residuals instead of running the kernel a second
+        # time, and the map stage keeps the cell-clustered partitions.
         data = pq_codes_arrow(
-            res.select("vec_id", "cell", "r"),
+            res.repartitionByRange(k_cells, "cell"),
             books=books,
             sub=sub,
             vec_col="r",
@@ -387,11 +386,12 @@ def build_ivfpq_index(
             "vec_id",
             "cell",
             F.array(*[f"c{s}" for s in range(n_sub)]).alias("codes"),
-        ).repartitionByRange(k_cells, "cell")
+        )
         ctab, btab = _pq_side_tables(table)
         snap.write_table(data, table, mode="overwrite", stats_cols=["cell"])
         snap.write_table(cents_df, ctab, mode="overwrite")
-        bdf = spark.createDataFrame(
+        bdf = local_frame(
+            spark,
             [
                 (s, cid, books[s][cid])
                 for s in range(n_sub)
@@ -454,15 +454,7 @@ def query_ivfpq_index(
         )
         return m[F.element_at(F.col("codes"), s + 1)]
 
-    parts = [
-        snap.read_pruned(spark, table, "cell", c, c, tag=tag).filter(
-            F.col("cell") == c
-        )
-        for c in probes
-    ]
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
+    cand = snap.read_where_in(spark, table, "cell", probes, tag=tag)
     adc = None
     for cell in probes:
         cell_adc = _lookup(cell, 0)
@@ -516,8 +508,10 @@ def query_ivfpq_index_rerank(
         spark, table, query_vec, k=shortlist, nprobe=nprobe, tag=tag
     ).select(F.col("vec_id").alias(id_col))
     base = vectors.join(F.broadcast(cand), id_col, "left_semi")
-    qdf = spark.createDataFrame(
-        [(list(float(v) for v in query_vec),)], f"query_embedding array<double>"
+    qdf = local_frame(
+        spark,
+        [([float(v) for v in query_vec],)],
+        "query_embedding array<double>",
     )
     top = topk_cosine_vectorized(
         base, qdf, k, id_col=id_col, vec_col=vec_col

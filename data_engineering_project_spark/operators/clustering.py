@@ -37,6 +37,7 @@ from data_engineering_project_spark.operators.kernels import (
     left_fold,
     split_rows,
 )
+from data_engineering_project_spark.sources.tables import local_frame
 
 
 def quantize_vec(vec: Column, scale: int) -> Column:
@@ -174,7 +175,7 @@ def pq_codes_arrow(
     """All PQ subspace codes as ONE Arrow map stage (guide §4): replaces
     ``n_sub`` interpreted ``_pq_code`` projections (HOFs are
     CodegenFallback — the r14 stage attribution put the scan's 1.3 s
-    almost entirely there, tools/ab_ivfpq_stages.py). Passes every other
+    almost entirely there, OPTIMIZATION_r14.md wave 3). Passes every other
     column of ``frame`` through untouched and appends ``c0..c{n_sub-1}``
     (int, same values as the expression form — semantics pinned in
     :func:`_make_codes_matrix`). ``strict_len=True`` with one whole-vector
@@ -230,7 +231,7 @@ def _lloyd_stats_arrow(
     statistics via an Arrow partial-aggregation kernel — the vectorized
     replica of the expression round (assignment argmins + posexplode +
     groupBy sum/count), whose interpreted argmin HOFs and 64× row explode
-    were the training round's entire 1.6 s (tools/ab_ivfpq_stages.py).
+    were the training round's entire 1.6 s (OPTIMIZATION_r14.md wave 3).
 
     Exactness: codes are bit-identical (:func:`_make_codes_matrix`);
     per-group sums are int64 over int64 (order-free); count parity
@@ -472,7 +473,7 @@ def _lloyd_books_multi(
         # assignment argmins + the 64× posexplode + groupBy, fused into one
         # Arrow partial-aggregation map stage (r14; was interpreted-HOF
         # argmin expressions — the whole training-round cost in
-        # tools/ab_ivfpq_stages.py). Bit-identical stats: exact int64 sums,
+        # OPTIMIZATION_r14.md wave 3). Bit-identical stats: exact int64 sums,
         # count parity incl. NULL elements, ANSI element_at throw on
         # phantom trailing dims — see _lloyd_stats_arrow.
         stats = _lloyd_stats_arrow(
@@ -688,7 +689,8 @@ def ivfpq_topk(
     )[:nprobe]
 
     # integer residuals vs the OWN cell's integer centroid
-    cents_df = pts.sparkSession.createDataFrame(
+    cents_df = local_frame(
+        pts.sparkSession,
         [(c, v) for c, v in sorted(cent_int.items())],
         "cell int, cvec array<bigint>",
     )

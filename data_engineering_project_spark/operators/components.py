@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_project_spark.sources.tables import local_frame
+
 
 def checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint: materialize ``df`` and truncate its lineage.
@@ -210,7 +212,8 @@ def connected_components(
             from pyspark.sql.types import StructField, StructType
 
             roots = F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     sorted(mapping.items()),
                     StructType(
                         [

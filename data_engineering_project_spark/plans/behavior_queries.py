@@ -36,7 +36,7 @@ from data_engineering_project_spark.functions.scalars import (
     sql_half_up_ratio,
 )
 from data_engineering_project_spark.plans.catalog import register
-from data_engineering_project_spark.sources.tables import load_table
+from data_engineering_project_spark.sources.tables import load_table, local_frame
 
 # Fixed RFM score boundaries (refreshed offline in production; quartiles of
 # the synthetic order history, stable across scale factors because
@@ -351,7 +351,8 @@ def events_cohort_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         pipeline._atomic_swap_write = real_swap
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 r["cohort_week"],

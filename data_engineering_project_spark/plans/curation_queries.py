@@ -26,7 +26,7 @@ from data_engineering_project_spark.functions.scalars import (
 )
 from data_engineering_project_spark.operators import curation as C
 from data_engineering_project_spark.plans.catalog import register
-from data_engineering_project_spark.sources.tables import load_table
+from data_engineering_project_spark.sources.tables import load_table, local_frame
 
 #: the held-out "benchmark" slice of the corpus for the contamination check —
 #: a fixed source plays the role of an eval suite.
@@ -529,7 +529,7 @@ def customers_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
         .agg(F.count("*").cast("bigint").alias("class_size"))
     )
-    ks = spark.createDataFrame([(k,) for k in K_ANONYMITY_KS], "k int")
+    ks = local_frame(spark, [(k,) for k in K_ANONYMITY_KS], "k int")
     joined = classes.crossJoin(F.broadcast(ks))
     viol = F.when(F.col("class_size") < F.col("k"), F.col("class_size")).otherwise(
         F.lit(0)

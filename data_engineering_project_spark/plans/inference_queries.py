@@ -35,7 +35,7 @@ from data_engineering_project_spark.functions.scalars import (
 )
 from data_engineering_project_spark.operators import text as T
 from data_engineering_project_spark.plans.catalog import register
-from data_engineering_project_spark.sources.tables import load_table
+from data_engineering_project_spark.sources.tables import load_table, local_frame
 
 #: o_totalprice carries 3 decimal places in the synthetic data → exact
 #: integer milli-units (the ROADMAP decimal-width rule).
@@ -1569,7 +1569,8 @@ def events_logreg_purchase_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         b0m += math.floor(g0 / n + 0.5)
         b1m += math.floor(g1 / n + 0.5)
         out.append((t, b0m, b1m, g0, g1))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         schema="iter bigint, beta0_micro bigint, beta1_micro bigint, "
         "grad0_micro bigint, grad1_micro bigint",

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_engineering_project_spark.plans.catalog import register
-from data_engineering_project_spark.sources.tables import load_table
+from data_engineering_project_spark.sources.tables import load_table, local_frame
 
 _PROFILE_COLS = (
     "l_quantity",
@@ -183,7 +183,7 @@ def events_value_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(Window.orderBy("bin")).alias("running"),
         F.sum("n").over(Window.partitionBy()).alias("total"),
     )
-    qs = spark.createDataFrame([(p,) for p in _QUANTILES], "p double")
+    qs = local_frame(spark, [(p,) for p in _QUANTILES], "p double")
     return (
         F.broadcast(qs)
         .join(cum, F.col("running") >= F.ceil(F.col("p") * F.col("total")))

@@ -17,7 +17,7 @@ from data_engineering_project_spark.functions.scalars import (
 )
 from data_engineering_project_spark.operators import similarity as S
 from data_engineering_project_spark.plans.catalog import register
-from data_engineering_project_spark.sources.tables import load_table
+from data_engineering_project_spark.sources.tables import load_table, local_frame
 
 EMB_DIM = 64
 
@@ -1559,7 +1559,7 @@ def emb_ivf_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not qrows:
         # empty corpus: nothing to index, nothing to probe — the oracle's
         # SQL yields zero rows on the same input
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     tmp = tempfile.mkdtemp(prefix="ivf_serving_")
     table = os.path.join(tmp, "index")
     rows = []
@@ -1588,10 +1588,7 @@ def emb_ivf_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        out_schema,
-    )
+    return local_frame(spark, rows, out_schema)
 
 
 # --- batched kNN join -------------------------------------------------------
@@ -1695,7 +1692,8 @@ def emb_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     )
-    q16 = spark.createDataFrame(
+    q16 = local_frame(
+        spark,
         [(int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in qrows],
         "qid bigint, qe array<double>",
     )
@@ -1814,7 +1812,8 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     )
-    a8 = spark.createDataFrame(
+    a8 = local_frame(
+        spark,
         [
             (int(r["vec_id"]),
              int(r["label"]) if r["label"] is not None else None,

@@ -31,7 +31,7 @@ from data_engineering_project_spark.functions.scalars import (
     sql_half_up_ratio,
 )
 from data_engineering_project_spark.plans.catalog import register
-from data_engineering_project_spark.sources.tables import load_table
+from data_engineering_project_spark.sources.tables import load_table, local_frame
 
 #: integer-unit scale for `events.value` (2 decimal places in the data; 100
 #: keeps daily sums ~1e7 — far from the 2**63 ceiling even at SF 1e5).
@@ -1766,7 +1766,8 @@ def events_ewma_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = read_ewma_trend(spark, tmp, alpha=0.25).collect()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (r["event_type"], int(r["n_days"]), r["ewma_value"])
             for r in rows

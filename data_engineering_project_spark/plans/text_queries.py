@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_project_spark.operators import text as T
 from data_engineering_project_spark.plans.catalog import register
-from data_engineering_project_spark.sources.tables import load_table
+from data_engineering_project_spark.sources.tables import load_table, local_frame
 
 
 @register(
@@ -1137,7 +1137,8 @@ def docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_BPE_TOPV)
     )
     merges = T.bpe_train(words, _BPE_ROUNDS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         schema="merge_round bigint, left_sym string, right_sym string, "
         "pair_count bigint, merged string",

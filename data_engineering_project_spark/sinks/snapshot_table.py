@@ -50,6 +50,9 @@ from dataclasses import dataclass, field
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from data_engineering_project_spark.sources.tables import local_frame
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -444,8 +447,6 @@ def _evolve_schema(prior: Manifest, new_schema):
     simply lack the column and read back as null. Anything else (missing
     column, changed type) is a loud :class:`SchemaEvolutionError`, never a
     silent cast or drop."""
-    from pyspark.sql import types as T
-
     if prior.schema is None:
         return new_schema  # pre-evolution table: adopt the frame's schema
     old = T.StructType.fromJson(json.loads(prior.schema))
@@ -478,13 +479,11 @@ def read_table(
     for time travel; ``tag`` resolves a named pin; ``as_of`` resolves a
     unix timestamp to the newest version committed at or before it —
     Delta's TIMESTAMP AS OF. The three selectors are mutually
-    exclusive). Empty file list → empty frame with no rows read.
-
-    Schema evolution: files written before a column was added simply lack
-    it — ``mergeSchema`` unions the physical schemas (missing → null) and
-    the result is projected onto the MANIFEST schema, so column order and
-    the presence of just-added all-null columns are stable regardless of
-    which physical files survive compaction."""
+    exclusive). The frame carries the version's manifest schema
+    (:func:`_read_files`); a fully-deleted version is an empty frame of
+    that schema, not a refusal (found by the model-based sweep — a delete
+    that emptied the table used to make every later read AND merge_upsert
+    crash)."""
     if sum(x is not None for x in (version, tag, as_of)) > 1:
         raise ValueError("pass at most one of version / tag / as_of")
     if tag is not None:
@@ -492,32 +491,9 @@ def read_table(
     elif as_of is not None:
         version = resolve_as_of(table, as_of)
     m = read_manifest(table, version)
-    paths = [os.path.join(table, f["path"]) for f in m.files]
-    if not paths:
-        if m.schema is not None:
-            # A fully-deleted version is legitimately EMPTY: readable
-            # with the manifest schema, not a refusal (found by the
-            # model-based sweep — a delete that emptied the table used
-            # to make every later read AND merge_upsert crash). Note
-            # this empty frame is a local relation: no _metadata column,
-            # so the copy-on-write writers guard their probe reads.
-            return _read_file_subset(spark, table, [], m.schema)
+    if not m.files and m.schema is None:
         raise ValueError(f"version {m.version} of {table!r} holds no files")
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    if m.schema is not None:
-        from pyspark.sql import types as T
-
-        want = T.StructType.fromJson(json.loads(m.schema))
-        have = {f.name for f in df.schema.fields}
-        df = df.select(
-            *[
-                F.col(f.name)
-                if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in want.fields
-            ]
-        )
-    return df
+    return _read_files(spark, table, [f["path"] for f in m.files], m.schema)
 
 
 def prune_files(m: Manifest, col: str, lo, hi) -> list[dict]:
@@ -544,56 +520,73 @@ def read_pruned(
 ) -> DataFrame:
     """Read only the files that can contain ``col`` in [lo, hi] — the
     caller still applies the exact predicate; pruning is a superset.
-    ``version``/``tag`` resolve exactly as in :func:`read_table`."""
+    ``version``/``tag`` resolve exactly as in :func:`read_table`, and the
+    frame carries the same manifest schema whichever files survive the
+    prune (a tag-pinned reader gets the pinned generation's schema even
+    mid-rebuild)."""
+    return _read_ranges(spark, table, col, [(lo, hi)], version, tag)
+
+
+def read_where_in(
+    spark: SparkSession,
+    table: str,
+    col: str,
+    values: Sequence,
+    *,
+    tag: str | None = None,
+) -> DataFrame:
+    """The rows whose ``col`` is one of ``values``, in ONE scan over the
+    union of the files each value's prune keeps (a probe of several index
+    cells reads each file once, with no per-value scan and union)."""
+    values = list(values)
+    return _read_ranges(
+        spark, table, col, [(v, v) for v in values], None, tag
+    ).filter(F.col(col).isin(values))
+
+
+def _read_ranges(
+    spark: SparkSession,
+    table: str,
+    col: str,
+    ranges: Sequence[tuple],
+    version: int | None,
+    tag: str | None,
+) -> DataFrame:
     if tag is not None:
         if version is not None:
             raise ValueError("pass version OR tag, not both")
         version = read_tag(table, tag)
     m = read_manifest(table, version)
-    keep = prune_files(m, col, lo, hi)
-    if not keep:
-        # Keep the resolved version: a tag-pinned reader must get the pinned
-        # generation's schema even mid-rebuild, not the current version's.
-        if m.schema is not None:
-            # build directly from the manifest's stored schema — routing
-            # through read_table would raise on a legitimately empty
-            # pinned version (no files to infer from)
-            return _read_file_subset(spark, table, [], m.schema)
-        return read_table(spark, table, version=version).filter(F.lit(False))
-    return spark.read.parquet(*[os.path.join(table, f["path"]) for f in keep])
+    keep = list(
+        dict.fromkeys(
+            f["path"] for lo, hi in ranges for f in prune_files(m, col, lo, hi)
+        )
+    )
+    if not keep and m.schema is None:
+        return read_table(spark, table, version=m.version).filter(F.lit(False))
+    return _read_files(spark, table, keep, m.schema)
 
 
-def _read_file_subset(
+def _read_files(
     spark: SparkSession, table: str, rel_paths: Sequence[str], schema_json: str | None
 ) -> DataFrame:
-    """Read a subset of a table's data files projected onto a manifest
-    schema (files written before a column existed read it as null), or an
-    empty frame of that schema when the subset is empty."""
-    from pyspark.sql import types as T
-
-    want = (
-        T.StructType.fromJson(json.loads(schema_json))
-        if schema_json is not None
-        else None
-    )
-    if not rel_paths:
-        if want is None:
+    """Read some of a table's data files as the manifest schema: one
+    parquet scan given that schema, so Spark runs no schema-inference job,
+    and a file written before a column was added reads it as NULL (the
+    additive rule :func:`_evolve_schema` enforces; types never change, so
+    every file matches the schema or lacks the column). An empty subset is
+    an empty local frame of the schema — no ``_metadata`` column, so the
+    copy-on-write writers guard their probe reads. Manifests written
+    before schema tracking fall back to ``mergeSchema`` inference."""
+    paths = [os.path.join(table, p) for p in rel_paths]
+    if schema_json is None:
+        if not paths:
             raise ValueError("empty file subset on a schema-less manifest")
-        return spark.createDataFrame([], want)
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table, p) for p in rel_paths]
-    )
-    if want is None:
-        return df
-    have = {f.name for f in df.schema.fields}
-    return df.select(
-        *[
-            F.col(f.name)
-            if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in want.fields
-        ]
-    )
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+    want = T.StructType.fromJson(json.loads(schema_json))
+    if not paths:
+        return local_frame(spark, [], want)
+    return spark.read.schema(want).parquet(*paths)
 
 
 def read_changes(
@@ -636,8 +629,8 @@ def read_changes(
     to_paths = {f["path"] for f in m_to.files}
     added = sorted(to_paths - from_paths)
     removed = sorted(from_paths - to_paths)
-    ins = _read_file_subset(spark, table, added, m_to.schema)
-    dels = _read_file_subset(spark, table, removed, m_to.schema)
+    ins = _read_files(spark, table, added, m_to.schema)
+    dels = _read_files(spark, table, removed, m_to.schema)
     return (
         ins.exceptAll(dels)
         .withColumn("_change", F.lit("insert"))

@@ -114,6 +114,39 @@ def _normalize_nanos(df: DataFrame) -> DataFrame:
     return df
 
 
+def local_frame(
+    spark: SparkSession, rows, schema: T.StructType | str
+) -> DataFrame:
+    """A frame over rows the driver already holds, as an Arrow
+    ``LocalRelation``: the plan is a ``LocalTableScan``, so a broadcast,
+    join or write of it runs no Python worker. ``createDataFrame(list)``
+    instead goes through ``parallelize`` into a ``PythonRDD``, and every
+    consumer then starts ``defaultParallelism`` Python tasks (each pays the
+    worker's per-task import set-up) to re-serialize a handful of rows.
+
+    ``schema`` is a DDL string or a ``StructType``; ``rows`` are tuples or
+    ``Row``s (positional, as in ``createDataFrame``) or ``[]``. Values go
+    through ``StructType.toInternal`` first, so timestamps and dates keep
+    ``createDataFrame``'s semantics (a naive datetime is local wall-clock
+    time of the driver process)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema
+        if isinstance(schema, T.StructType)
+        else T._parse_datatype_string(schema)
+    )
+    arrow = to_arrow_schema(struct)
+    internal = [struct.toInternal(r) for r in rows]
+    columns = list(zip(*internal)) if internal else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read the full catalog and register each table as a temp view so both
     the DataFrame API and ``spark.sql`` reach the same scans. Tables whose

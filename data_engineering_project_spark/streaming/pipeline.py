@@ -23,10 +23,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_engineering_project_spark.functions.scalars import compose_datetime
 from data_engineering_project_spark.operators.report import TYPE_COLUMNS, day_hours
 from data_engineering_project_spark.sources.events import with_filename_event_time
+from data_engineering_project_spark.sources.tables import local_frame
 
 #: Histogram bin for values ≤ 0 (no geometric bin exists): sorts before
 #: every real bin and pow(base, ·) underflows to 0.0 in the estimator.
@@ -96,8 +98,8 @@ def dense_hourly_grid(batch: DataFrame) -> DataFrame:
     report (``src/Task1/data_processing.py:306-338``). The spine is
     dates × 24 × |types| rows, anti-joined with the batch's keys."""
     keys = ["date", "hour", "event_type"]
-    types = batch.sparkSession.createDataFrame(
-        [(t,) for t in TYPE_COLUMNS], "event_type string"
+    types = local_frame(
+        batch.sparkSession, [(t,) for t in TYPE_COLUMNS], "event_type string"
     )
     spine = (
         batch.select("date")
@@ -250,7 +252,8 @@ def psql_report_batch(
             session.close()
         # psql -At renders SQL NULL as an empty string; tolerate counts
         # written out of band as NULL the same way the JDBC twin does.
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (r[0], int(r[1]) if r[1] else 0, int(r[2]) if r[2] else 0)
                 for r in rows
@@ -344,13 +347,16 @@ def snapshot_upsert_batch(
     return _write
 
 
-def _recover_and_read(spark: SparkSession, target_dir: str) -> DataFrame | None:
+def _recover_and_read(
+    spark: SparkSession, target_dir: str, schema: T.StructType
+) -> DataFrame | None:
     """Crash recovery + read for rewrite-on-merge state tables (the sketch
     and cohort writers below): a writer that died
     between the two swap renames left ``<target>_old`` holding the data —
     restore it; stale ``_next``/``_old`` from any earlier crash are dead
-    weight. Returns the current target frame, or None if the target is
-    empty/absent."""
+    weight. Returns the current target frame read as ``schema`` (the
+    state's known columns, so Spark runs no schema-inference job), or None
+    if the target is empty/absent."""
     import shutil
 
     next_dir, old_dir = target_dir + "_next", target_dir + "_old"
@@ -361,7 +367,7 @@ def _recover_and_read(spark: SparkSession, target_dir: str) -> DataFrame | None:
     if os.path.isdir(target_dir) and any(
         f.endswith(".parquet") for f in os.listdir(target_dir)
     ):
-        return spark.read.parquet(target_dir)
+        return spark.read.schema(schema).parquet(target_dir)
     return None
 
 
@@ -391,8 +397,10 @@ def _commit_state(
     with ``merge(current, new)`` (``new`` alone when there is no state yet),
     and swap the result in. Every rewrite-on-merge state table goes
     through here; the primitives are looked up at call time, so a test can
-    kill the swap."""
-    current = _recover_and_read(new.sparkSession, target_dir)
+    kill the swap. The state is only ever written as ``new`` or as
+    ``merge(current, new)``, so it has ``new``'s columns and is read with
+    ``new.schema``."""
+    current = _recover_and_read(new.sparkSession, target_dir, new.schema)
     merged = new if current is None else merge(current, new)
     _atomic_swap_write(merged, target_dir)
 
@@ -581,7 +589,7 @@ def read_quantile_estimates(
         F.sum("n").over(Window.orderBy("bin")).alias("running"),
         F.sum("n").over(Window.partitionBy()).alias("total"),
     )
-    qs = spark.createDataFrame([(p,) for p in quantiles], "p double")
+    qs = local_frame(spark, [(p,) for p in quantiles], "p double")
     return (
         F.broadcast(qs)
         .join(cum, F.col("running") >= F.ceil(F.col("p") * F.col("total")))
@@ -1767,7 +1775,7 @@ def upsert_components_incremental(
         if st.current_version(table_dir) is not None:
             state = st.read_table(spark, table_dir)
         else:
-            state = spark.createDataFrame([], "node bigint, component bigint")
+            state = local_frame(spark, [], "node bigint, component bigint")
         state = state.persist()
         try:
             mapped = (
@@ -2066,15 +2074,7 @@ def knn_serving_batch(
             cells = sorted(
                 r["cell"] for r in probes.select("cell").distinct().collect()
             )
-            parts = [
-                snap.read_pruned(
-                    spark, index_table, "cell", c, c, tag=tag
-                ).filter(F.col("cell") == c)
-                for c in cells
-            ]
-            idx = parts[0]
-            for p in parts[1:]:
-                idx = idx.unionByName(p)
+            idx = snap.read_where_in(spark, index_table, "cell", cells, tag=tag)
             cand = idx.join(F.broadcast(probes), "cell")
             scored = score_cosine_pairs_vectorized(
                 cand,

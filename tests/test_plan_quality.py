@@ -893,9 +893,10 @@ def test_serving_index_probe_reads_are_pruned(spark, sf_dir, tmp_path):
     qv = [float(v) for v in emb.orderBy("vec_id").first()["embedding"]]
     df = query_ivf_index(spark, table, qv, k=5, nprobe=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    n_paths = plan.count("InMemoryFileIndex")
-    # two probed cells -> two single-file scans (union of two pruned reads)
-    assert n_paths == 2, plan[:500]
+    # two probed cells -> ONE scan listing exactly their two files (one
+    # pruned read over both cells' file sets)
+    assert plan.count("InMemoryFileIndex") == 1, plan[:500]
+    assert "InMemoryFileIndex(2 paths)" in plan, plan[:500]
 
 
 #: an interpreted vector fold: ``aggregate(zip_with(...), 0.0, acc + x)``

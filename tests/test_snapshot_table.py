@@ -823,3 +823,24 @@ def test_as_of_clamps_non_monotonic_commit_times(spark, table):
         _warnings.simplefilter("always")
         assert st.resolve_as_of(table, 150.0) == 1
     assert not caught
+
+
+def test_read_pruned_keeps_the_table_schema(spark, table):
+    """A pruned read carries the manifest schema like read_table: after an
+    additive evolution, a prune that keeps only pre-evolution files still
+    returns the added column, as NULL."""
+    st.write_table(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, a string"),
+        table,
+        stats_cols=["k"],
+    )
+    st.write_table(
+        spark.createDataFrame([(5, "e", 50)], "k int, a string, b int"),
+        table,
+        mode="append",
+        stats_cols=["k"],
+    )
+    assert st.read_table(spark, table).columns == ["k", "a", "b"]
+    pruned = st.read_pruned(spark, table, "k", 1, 1)
+    assert pruned.columns == ["k", "a", "b"]
+    assert sorted(tuple(r) for r in pruned.filter("k = 1").collect()) == [(1, "a", None)]
