@@ -352,6 +352,7 @@ def _dispatch(spark, args) -> int:
             args.output_dir,
             args.checkpoint_dir,
             schema,
+            user_agent=args.user_agent,
             available_now=args.available_now,
         )
     return 0

@@ -164,7 +164,7 @@ def cms_heavy_hitters(
     ``CMS(weighted counts) == CMS(stream)`` bit-for-bit (same buckets,
     same sums, collisions included), but the md5 probes are computed per
     DISTINCT key instead of per stream row and pass 2 reuses the same
-    probed frame instead of rescanning the table (A/B tools/ab_cms.py on
+    probed frame instead of rescanning the table (A/B in ROADMAP.md at a5831e4^, on
     the sf0.1->sf0.5 big denominators: marginal 2.00 s -> ~0, absolute
     halved). The trade is the shuffle shape: pre-agg's exchange carries
     distinct-keys-per-partition partials — the right choice when key

@@ -45,6 +45,40 @@ class PipelineResult:
         return self.quality.get["n_invalid"]
 
 
+def select_report_rows(
+    events: DataFrame,
+    user_agent: str | None,
+    observation: Observation | None = None,
+) -> Q.SplitResult:
+    """The report's rows, for the batch run and the stream alike: the
+    ``user_agent`` match on :data:`UA_COLUMN` (reference :139-141), then the
+    dead-letter split on the file-name hour (:247-265) and the
+    :data:`TYPE_COLUMNS` types. ``observation`` gets the UA-matched rows'
+    counts; a batch split counts ``n_rows``/``n_invalid`` (a stream counts
+    nothing: ``Observation`` does not support streaming Datasets)."""
+    if user_agent is not None:
+        events = filter_equals(events, UA_COLUMN, user_agent)
+    if observation is not None:
+        events = events.observe(
+            observation,
+            F.count(F.lit(1)).alias("rows_matched"),
+            # observed metrics forbid DISTINCT aggregates; the set of dates
+            # is tiny (one batch spans days) and exact, where the HLL sketch
+            # already misreads 7 dates as 6
+            F.size(F.collect_set(F.col("event_date"))).alias("n_dates"),
+            F.count(F.when(F.col(UA_COLUMN).isNull(), 1)).alias("null_ua_rows"),
+        )
+    return Q.split_valid_invalid(
+        events,
+        [
+            Q.domain_rule("event_hour", 0, 23, name="Invalid hour"),
+            Q.Rule("Unknown event type", ~F.col("event_type").isin(*TYPE_COLUMNS)),
+        ],
+        source_file=F.col("source_file"),
+        observe=not events.isStreaming,
+    )
+
+
 def build_daily_report(
     spark: SparkSession,
     input_dir: str,
@@ -55,39 +89,18 @@ def build_daily_report(
 ) -> tuple[DataFrame, Q.SplitResult]:
     """Landing dir → (dense daily report, dead-letter split).
 
-    Steps mirror the reference exactly (filter on the nested UA column
-    :139-141; hour from filename :238-244; out-of-domain hours excluded
-    :247-265; dense 24h grid :306-338) but compiled into one Catalyst plan.
+    Steps mirror the reference exactly (rows chosen by
+    :func:`select_report_rows`; hour from filename :238-244; dense 24h grid
+    :306-338) but compiled into one Catalyst plan.
 
     ``observation``: the reference fires ≥8 eager count/collect actions per
     date purely for logging, re-executing lineage each time
     (data_processing.py:134-291 — SURVEY.md §3.1). ``df.observe`` collects
     the same numbers as a side effect of the one real action, at zero extra
-    jobs; read ``observation.get`` after the write. The split carries its
-    own observation (``n_rows``/``n_invalid``) the same way.
+    jobs; read ``observation.get`` (and the split's) after the write.
     """
-    raw = read_event_files(spark, input_dir, schema=schema)
-    filtered = (
-        filter_equals(raw, UA_COLUMN, user_agent) if user_agent is not None else raw
-    )
-    if observation is not None:
-        filtered = filtered.observe(
-            observation,
-            F.count(F.lit(1)).alias("rows_matched"),
-            # observed metrics forbid DISTINCT aggregates; the set of dates
-            # is tiny (one batch spans days) and exact, where the HLL sketch
-            # already misreads 7 dates as 6
-            F.size(F.collect_set(F.col("event_date"))).alias("n_dates"),
-            F.count(F.when(F.col(UA_COLUMN).isNull(), 1)).alias("null_ua_rows"),
-        )
-    split = Q.split_valid_invalid(
-        filtered,
-        [
-            Q.domain_rule("event_hour", 0, 23, name="Invalid hour"),
-            Q.Rule("Unknown event type", ~F.col("event_type").isin(*TYPE_COLUMNS)),
-        ],
-        source_file=F.col("source_file"),
-        observe=True,
+    split = select_report_rows(
+        read_event_files(spark, input_dir, schema=schema), user_agent, observation
     )
     report = combine_hourly_reports(
         split.valid,

@@ -637,7 +637,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan upper-bounds it; the gate still declines when supplier itself
     # outgrows the threshold (TPC-H suppliers scale with SF — a hard hint
     # would OOM at 100 TB, round-1 verdict #3). A/B 3/3 sessions
-    # (tools/ab_q5_buildside.py): raw 1.37→1.06, 1.36→0.88, 1.35→0.84 s at
+    # (ROADMAP.md at a5831e4^): raw 1.37→1.06, 1.36→0.88, 1.35→0.84 s at
     # sf0.1; marginal 0.44→0.13, 0.47→0.13 in two.
     return (
         li.join(

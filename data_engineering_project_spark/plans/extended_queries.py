@@ -1407,8 +1407,8 @@ def events_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre_agg: user_id is a bounded-cardinality key (the per-key exact
     # fold's exchange carries distinct-users-per-partition partials, tiny
     # here), so the weighted build — md5 per DISTINCT key, one probed
-    # frame reused by build + estimate — wins outright: A/B tools/
-    # ab_cms.py on the sf0.1->sf0.5 denominators measured marginal
+    # frame reused by build + estimate — wins outright: A/B (ROADMAP.md
+    # at a5831e4^) on the sf0.1->sf0.5 denominators measured marginal
     # 2.00 s -> ~0 with identical output (slope 7.3 -> fixed). The
     # operator DEFAULT stays stream-shaped for billions-of-long-tail-keys
     # workloads where the sketch-sized shuffle is the whole point.

@@ -154,7 +154,7 @@ def parts_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def suppliers_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup (orderkey, suppkey) in a codegen HashAggregate BEFORE the
     # collect_set fold: the ObjectHashAggregate (no codegen) then sees
-    # pre-shrunk, pre-combined input. A/B tools/ab_cooccurrence.py at
+    # pre-shrunk, pre-combined input. A/B (ROADMAP.md at a5831e4^) at
     # sf0.1: marginal 0.89→0.75 s and 1.32→0.82 s across two sessions;
     # the all-codegen distinct+self-join variant measured WORSE (extra
     # shuffle outweighs the codegen win at ≤7 lines/order).

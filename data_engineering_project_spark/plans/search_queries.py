@@ -223,7 +223,7 @@ def docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global stats aggregate and the scoring join, and without the pin
     # the interpreted HOF fold — the dominant cost — runs twice per
     # execution. Cold-cache A/B on the sf0.1->sf0.5 denominators
-    # (tools/ab_bm25.py + clearCache protocol): marginal 1.55 -> 0.55 s,
+    # (clearCache protocol, ROADMAP.md at a5831e4^): marginal 1.55 -> 0.55 s,
     # slope 2.1 -> ~0.4. A regexp_count lookaround variant measured the
     # same marginal with no persist; kept the fold for one tokenizer
     # primitive across the search family.

@@ -659,7 +659,7 @@ def docs_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bigrams are PACKED-CODEPOINT LONGS, not 2-char strings: the key
     # rides through a persist, a broadcast join, and two groupBys, and a
     # long hashes/compares/serializes for a fraction of a UTF8String
-    # (A/B tools/ab_bigram_lm_variants.py on the sf0.1->sf0.5 big
+    # (A/B in ROADMAP.md at a5831e4^, on the sf0.1->sf0.5 big
     # denominators: marginal 1.99 -> 0.80 s, slope 3.2 -> ~1.9; the
     # split-chars-only variant measured FLAT, so the string keys — not
     # the substring walk — were the cost). 1114112 = 0x110000 exceeds

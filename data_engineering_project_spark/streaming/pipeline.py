@@ -10,9 +10,10 @@ Structured Streaming replaces every piece:
 | reference mechanism            | here                                       |
 |--------------------------------|--------------------------------------------|
 | cron cadence                   | ``trigger(availableNow=True)`` per run, or a long-running ``processingTime`` trigger |
-| delete-file-after-success      | file-source checkpoint WAL (+ optional ``cleanSource``) — exactly-once input without destroying data |
+| delete-file-after-success      | file-source checkpoint WAL — exactly-once input without destroying data |
 | filename hour bucketing        | same filename-derived ``batch_ts`` column, tumbling ``F.window(batch_ts, '1 hour')`` |
 | no late-data policy            | ``withWatermark`` — late files update their hour until the watermark closes it |
+| UA filter, hour and type rules | the batch run's ``pipeline.select_report_rows`` |
 | archive/delete/insert rerun    | ``foreachBatch`` upsert keyed on (date, hour, type) |
 """
 
@@ -27,12 +28,16 @@ from pyspark.sql import types as T
 
 from data_engineering_project_spark.functions.scalars import compose_datetime
 from data_engineering_project_spark.operators.report import TYPE_COLUMNS, day_hours
+from data_engineering_project_spark.pipeline import select_report_rows
 from data_engineering_project_spark.sources.events import with_filename_event_time
 from data_engineering_project_spark.sources.tables import local_frame
 
 #: Histogram bin for values ≤ 0 (no geometric bin exists): sorts before
 #: every real bin and pow(base, ·) underflows to 0.0 in the estimator.
 UNDERFLOW_BIN = -(1 << 62)
+
+#: How far behind the newest batch time an hour of the report closes.
+REPORT_WATERMARK = "2 hours"
 
 
 def read_event_stream(
@@ -41,14 +46,10 @@ def read_event_stream(
     schema,
     *,
     max_files_per_trigger: int | None = None,
-    clean_source: str | None = None,
-    archive_dir: str | None = None,
 ) -> DataFrame:
     """File-source stream of the ``*.parquet`` files under ``input_dir``
     with the batch run's filename-derived columns
     (``sources/events.py:with_filename_event_time``).
-    ``cleanSource='archive'|'delete'`` gives the reference's
-    consume-the-input behavior without losing replayability.
     """
     reader = (
         spark.readStream.schema(schema)
@@ -57,30 +58,21 @@ def read_event_stream(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if clean_source:
-        reader = reader.option("cleanSource", clean_source)
-        if archive_dir:
-            reader = reader.option("sourceArchiveDir", archive_dir)
     return with_filename_event_time(reader.parquet(input_dir))
 
 
 def hourly_counts_stream(
-    events: DataFrame,
-    *,
-    watermark: str = "2 hours",
-    time_col: str = "batch_ts",
+    events: DataFrame, *, user_agent: str | None = None
 ) -> DataFrame:
-    """Tumbling 1-hour counts per event type with late-data tolerance.
-
-    The watermark bounds state: hours older than (max seen ts − watermark)
-    finalize and their state is dropped — the piece the reference's
-    'any file whose name parses lands in that date's output' policy lacks
-    (T5). Output mode 'update' emits revised counts per micro-batch.
-    """
+    """Tumbling 1-hour counts per event type of ``pipeline.select_report_rows``
+    (its dead letter is dropped: the query has one sink). Hours older than
+    (max seen ts − :data:`REPORT_WATERMARK`) finalize and drop their state —
+    the late-data policy the reference lacks (T5); output mode 'update'
+    emits revised counts per micro-batch."""
     return (
-        events.filter(F.col(time_col).isNotNull())
-        .withWatermark(time_col, watermark)
-        .groupBy(F.window(time_col, "1 hour").alias("win"), F.col("event_type"))
+        select_report_rows(events, user_agent)
+        .valid.withWatermark("batch_ts", REPORT_WATERMARK)
+        .groupBy(F.window("batch_ts", "1 hour").alias("win"), F.col("event_type"))
         .agg(F.count("*").alias("n"))
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("date"),
@@ -172,7 +164,7 @@ def _report_merge_writer(
     load: Callable,
 ) -> Callable:
     """Shared core of the streaming report writers: pivot the batch's
-    revised (date, hour, type) counts to client_report shape
+    revised (date, hour, type) counts of the report's types to client_report shape
     (:data:`TYPE_COLUMNS`, keyed on :func:`compose_datetime`), coalesce
     un-revised type columns against the target's existing window rows
     (``read_existing(spark, lo, hi) -> DataFrame`` with datetime /
@@ -182,8 +174,7 @@ def _report_merge_writer(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         pivot = (
-            batch_df.filter(F.col("event_type").isin(*TYPE_COLUMNS))
-            .groupBy(compose_datetime("date", "hour").alias("datetime"))
+            batch_df.groupBy(compose_datetime("date", "hour").alias("datetime"))
             .agg(
                 # NULL (not 0) when this batch carries no rows for the type:
                 # "not revised" must stay distinguishable from "zero"
@@ -943,14 +934,14 @@ def run_incremental_report(
     checkpoint_dir: str,
     schema,
     *,
-    watermark: str = "2 hours",
+    user_agent: str | None = None,
     available_now: bool = True,
-    clean_source: str | None = None,
-    archive_dir: str | None = None,
 ) -> None:
     """One incremental run (the cron-tick replacement): process exactly the
-    files the checkpoint hasn't seen, upsert hour counts into the target.
-    Blocks until the availableNow trigger drains.
+    files the checkpoint hasn't seen, upsert hour counts of the batch run's
+    rows (``user_agent`` as in ``run_daily_report``) into the target. Blocks
+    until the availableNow trigger drains, or, on a one-minute
+    ``processingTime`` trigger, until the query stops.
 
     The target meets the same 24-rows/date contract as the batch report:
     every date in it carries the full hour × type grid, zero-filled
@@ -960,14 +951,9 @@ def run_incremental_report(
     snapshot-manifest table (:func:`snapshot_upsert_batch`) — O(touched
     files) per batch; read it back with
     ``sinks.snapshot_table.read_table``."""
-    events = read_event_stream(
-        spark,
-        input_dir,
-        schema,
-        clean_source=clean_source,
-        archive_dir=archive_dir,
+    counts = hourly_counts_stream(
+        read_event_stream(spark, input_dir, schema), user_agent=user_agent
     )
-    counts = hourly_counts_stream(events, watermark=watermark)
     batch_fn = snapshot_upsert_batch(
         target_dir, ["date", "hour", "event_type"], densify=dense_hourly_grid
     )
@@ -976,11 +962,10 @@ def run_incremental_report(
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(batch_fn)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        writer.trigger(processingTime="1 minute").start()
+    trigger = (
+        {"availableNow": True} if available_now else {"processingTime": "1 minute"}
+    )
+    writer.trigger(**trigger).start().awaitTermination()
 
 
 def session_counts_stream(

@@ -76,7 +76,7 @@ def test_empty_input_empty_report(spark):
         types=("impressions", "clicks"),
     ).collect()
     # no observed dates → no spine rows (per-date zero grids require the
-    # date to appear in the data or a supplied spine)
+    # date to appear in the data)
     assert out == []
 
 

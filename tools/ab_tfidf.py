@@ -12,7 +12,7 @@ run-length device `docs_repetition_profile` ratified this round (guide
 §2.3/§2.4): per-doc (term, tf) pairs are computed INSIDE the row via
 boundary positions over array_sort(tokens) — only (doc, distinct-term)
 rows ever leave the projection, the persist makes the interpreted HOF run
-once (the BM25 lesson, tools/ab_bm25.py), df comes from the same frame,
+once (the BM25 lesson, ROADMAP.md at a5831e4^), df comes from the same frame,
 and the vocab-sized df table broadcasts size-gated (the collocations
 marginals pattern).
 
