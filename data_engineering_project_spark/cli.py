@@ -333,7 +333,7 @@ def _dispatch(spark, args) -> int:
         )
         for path in result.csv_paths:
             print(path)
-        # counted by the CSV write job itself; no second scan
+        # counted by the report's collect itself; no second scan
         n_invalid = result.dead_letter_rows
         if n_invalid:
             print(f"dead-letter rows: {n_invalid}", file=sys.stderr)
@@ -403,7 +403,6 @@ def _run_load(spark, args) -> None:
     import json
 
     import duckdb
-    from pyspark.sql import functions as F
 
     from data_engineering_project_spark import warehouse as W
     from data_engineering_project_spark.sinks.warehouse_sink import (
@@ -411,53 +410,47 @@ def _run_load(spark, args) -> None:
         execute_merge,
     )
 
-    prepared = W.prepare_report(W.read_report_csv(spark, args.csv))
-    split = W.validate_report(prepared, source_file=args.csv)
-    # the FULL prepared batch is staged (reference warehouse.py:411-466 loads
-    # every row into client_report; invalid rows are dead-lettered AND
-    # loaded) — so the archive/delete window spans the whole delivery, and
-    # re-delivering a file whose boundary rows became invalid still replaces
-    # everything the previous delivery wrote
-    batch_pdf = prepared.toPandas()
+    split = W.validate_report(W.prepare_report(W.read_report_csv(spark, args.csv)))
+    # one action reads the whole delivery, each row tagged with its first
+    # violated rule (NULL when valid): the FULL batch is staged (reference
+    # warehouse.py:411-466 loads every row into client_report; invalid rows
+    # are dead-lettered AND loaded) — so the archive/delete window spans the
+    # whole delivery, and re-delivering a file whose boundary rows became
+    # invalid still replaces everything the previous delivery wrote
+    delivery = split.tagged.toPandas()
     # a row without a datetime key cannot be archived, replaced or
     # dead-lettered (both tables key on datetime): refuse the delivery
     # before any table is touched
-    n_unkeyed = int(batch_pdf["datetime"].isna().sum())
+    n_unkeyed = int(delivery["datetime"].isna().sum())
     if n_unkeyed:
         raise ValueError(
             f"{n_unkeyed} row(s) in {args.csv} have no date or hour; "
             "nothing loaded"
         )
-    invalid_pdf = split.invalid.select(
-        "datetime",
-        "impression_count",
-        "click_count",
-        "audit_loaded_datetime",
-        "validation_error",
-        F.col("source_file"),
-    ).toPandas()
+    n_invalid = int(delivery["validation_error"].notna().sum())
 
     con = duckdb.connect(args.db)
     for name, ddl in W.DDL.items():
         # DuckDB's ART index cannot delete+reinsert a PK in one txn; the
         # embedded stand-in drops the PK (Postgres keeps it)
         con.execute(ddl.replace("TIMESTAMP PRIMARY KEY", "TIMESTAMP"))
-    con.register("_full_batch", batch_pdf)
-    con.register("_invalid_batch", invalid_pdf)
+    con.register("_delivery", delivery)
     con.execute(
-        "CREATE OR REPLACE TABLE client_report_staging AS SELECT * FROM _full_batch"
+        "CREATE OR REPLACE TABLE client_report_staging AS "
+        "SELECT datetime, impression_count, click_count, audit_loaded_datetime "
+        "FROM _delivery ORDER BY datetime"
     )
     con.execute(
         "CREATE OR REPLACE TABLE client_report_invalid_staging AS "
-        "SELECT * FROM _invalid_batch"
+        "SELECT datetime, impression_count, click_count, audit_loaded_datetime, "
+        "validation_error, source_file "
+        "FROM _delivery WHERE validation_error IS NOT NULL"
     )
     spec = MergeSpec(
         target="client_report",
         archive="client_report_archive",
         staging="client_report_staging",
-        invalid_staging="client_report_invalid_staging"
-        if len(invalid_pdf)
-        else None,
+        invalid_staging="client_report_invalid_staging" if n_invalid else None,
     )
     # the dead-letter upsert runs inside the merge transaction (only
     # client_report's PK is stripped above; client_report_invalid keeps the
@@ -465,7 +458,7 @@ def _run_load(spark, args) -> None:
     execute_merge(con, spec)
     summary = W.verify_load(con)
     summary = {k: str(v) for k, v in summary.items()}
-    summary["invalid_rows"] = str(len(invalid_pdf))
+    summary["invalid_rows"] = str(n_invalid)
     print(json.dumps(summary))
     con.close()
 

@@ -4,7 +4,8 @@ Reference lifecycle (``src/Task1/data_processing.py:15-192``): driver-side
 ``os.listdir`` manifest → per-(date, type) Spark jobs → per-date CSV. Here:
 ONE scan over the landing directory, filename-derived metadata columns, one
 aggregation across all dates and event types, one map-explode densification,
-one partitioned CSV write. No driver loops, no re-executed lineage; at 100 TB
+one collect of the bounded report (24 rows per date), from which the driver
+writes the per-date CSVs. No driver loops, no re-executed lineage; at 100 TB
 this is a single shuffle (the groupBy) over the filtered events.
 """
 
@@ -33,15 +34,15 @@ class PipelineResult:
     report: DataFrame
     invalid: DataFrame
     csv_paths: list[str]
-    #: rows_matched / n_dates / null_ua_rows, filled by the write action
+    #: rows_matched / n_dates / null_ua_rows, filled by the report's collect
     observation: Observation
     #: the dead-letter split's n_rows / n_invalid, filled by the same action
     quality: Observation
 
     @property
     def dead_letter_rows(self) -> int:
-        """Rows routed to ``invalid``, counted by the write job — reading
-        it runs no second scan."""
+        """Rows routed to ``invalid``, counted by the report's collect —
+        reading it runs no second scan."""
         return self.quality.get["n_invalid"]
 
 
@@ -97,7 +98,8 @@ def build_daily_report(
     date purely for logging, re-executing lineage each time
     (data_processing.py:134-291 — SURVEY.md §3.1). ``df.observe`` collects
     the same numbers as a side effect of the one real action, at zero extra
-    jobs; read ``observation.get`` (and the split's) after the write.
+    jobs; read ``observation.get`` (and the split's) after the report is
+    collected.
     """
     split = select_report_rows(
         read_event_files(spark, input_dir, schema=schema), user_agent, observation

@@ -418,7 +418,10 @@ def docs_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism, F.col("lang"), F.col("lb")
     )
     a, b = d.alias("a"), d.alias("b")
-    dist = F.levenshtein(F.col("a.prefix"), F.col("b.prefix"))
+    # thresholded form: stops a pair's O(m*n) table once the distance
+    # passes 12 and returns -1 (REPOSE's prune-before-exact-distance); a
+    # NULL prefix stays NULL, which `>= 0` drops as `<= 12` did
+    dist = F.levenshtein(F.col("a.prefix"), F.col("b.prefix"), 12)
     return (
         a.join(
             b,
@@ -426,7 +429,7 @@ def docs_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.lb") == F.col("b.lb"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .where(dist <= 12)
+        .where(dist >= 0)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

@@ -90,6 +90,9 @@ def domain_rule(col: str, lo: int, hi: int, name: str | None = None) -> Rule:
 class SplitResult:
     valid: DataFrame
     invalid: DataFrame  # original columns + validation_error (first reason)
+    #: every row with its ``validation_error`` (NULL when valid): the frame
+    #: ``valid`` and ``invalid`` filter, for a caller that reads both at once
+    tagged: DataFrame
     observation: Observation | None = None
     corrected_rules: list[str] = field(default_factory=list)
 
@@ -145,7 +148,13 @@ def split_valid_invalid(
     if source_file is not None:
         src = F.lit(source_file) if isinstance(source_file, str) else source_file
         invalid = invalid.withColumn("source_file", src)
-    return SplitResult(valid=valid, invalid=invalid, observation=obs, corrected_rules=corrected)
+    return SplitResult(
+        valid=valid,
+        invalid=invalid,
+        tagged=tagged,
+        observation=obs,
+        corrected_rules=corrected,
+    )
 
 
 def classify_count_relationship(

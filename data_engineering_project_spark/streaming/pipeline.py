@@ -19,6 +19,8 @@ Structured Streaming replaces every piece:
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 from collections.abc import Callable
 
@@ -362,6 +364,24 @@ def _recover_and_read(
     return None
 
 
+def _read_state(spark: SparkSession, state_dir: str) -> DataFrame:
+    """Read a state table with the schema Spark recorded in its parquet
+    footer (``org.apache.spark.sql.parquet.row.metadata``; every state dir
+    is one Spark write), so building the frame runs no schema-inference
+    job. A missing or empty dir reads through ``spark.read.parquet`` and
+    raises as it always did."""
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(state_dir, "*.parquet")))
+    if not files:
+        return spark.read.parquet(state_dir)
+    recorded = pq.read_schema(files[0]).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"
+    ]
+    schema = T.StructType.fromJson(json.loads(recorded))
+    return spark.read.schema(schema).parquet(state_dir)
+
+
 def _atomic_swap_write(merged: DataFrame, target_dir: str) -> None:
     """Materialize ``merged`` into ``<target>_next``, then swap via directory
     renames (atomic on one filesystem) — never a second Spark overwrite of
@@ -467,7 +487,7 @@ def read_cms_estimates(
     from data_engineering_project_spark.operators.sketch import cms_estimate
 
     merged = (
-        spark.read.parquet(target_dir)
+        _read_state(spark, target_dir)
         .groupBy("row_idx", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -568,7 +588,7 @@ def read_quantile_estimates(
     from pyspark.sql import Window
 
     merged = (
-        spark.read.parquet(target_dir)
+        _read_state(spark, target_dir)
         # defensive vs state written before the underflow-bin fix: a NULL
         # bin would sort first and shift every running count
         .filter(F.col("bin").isNotNull())
@@ -608,7 +628,7 @@ def read_histogram_drift(
     from pyspark.sql import Window
 
     h = (
-        spark.read.parquet(target_dir)
+        _read_state(spark, target_dir)
         .filter(F.col("bin").isNotNull())
         .groupBy("day", "bin")
         .agg(F.sum("n").alias("n"))
@@ -726,7 +746,7 @@ def upsert_drift_cusum(
 def read_drift_alarms(spark: SparkSession, alarm_dir: str) -> DataFrame:
     """Query side of the CUSUM alarm state: per-day KS, cumulative
     deviation (micro-units), and the boolean alarm, in day order."""
-    return spark.read.parquet(alarm_dir).orderBy("day")
+    return _read_state(spark, alarm_dir).orderBy("day")
 
 
 def upsert_ewma_state(
@@ -777,7 +797,7 @@ def read_ewma_trend(
     ``alpha=0.25`` the result is bit-identical to ``events_value_ewma``
     over the same events (the test asserts exactly this)."""
     daily = (
-        spark.read.parquet(target_dir)
+        _read_state(spark, target_dir)
         .groupBy("event_type", "day")
         .agg(F.sum("x").alias("x"))
     )
@@ -899,8 +919,8 @@ def read_cohort_retention(spark: SparkSession, target_dir: str) -> DataFrame:
     state join keys on user_id only, so it broadcasts when first_touch is
     small and shuffles on the user key otherwise — same exchange the
     batch window pays."""
-    ft = spark.read.parquet(os.path.join(target_dir, "first_touch"))
-    uw = spark.read.parquet(os.path.join(target_dir, "user_weeks"))
+    ft = _read_state(spark, os.path.join(target_dir, "first_touch"))
+    uw = _read_state(spark, os.path.join(target_dir, "user_weeks"))
     cohort = ft.select(
         "user_id", F.date_trunc("week", F.col("first_ts")).alias("cohort_week")
     )
@@ -920,7 +940,7 @@ def read_cohort_retention(spark: SparkSession, target_dir: str) -> DataFrame:
 def read_daily_distinct_estimates(spark: SparkSession, target_dir: str) -> DataFrame:
     """Query side of the sketch table: per-day estimates plus the all-days
     rollup folded from the SAME persisted sketches (no raw-event re-scan)."""
-    sk = spark.read.parquet(target_dir)
+    sk = _read_state(spark, target_dir)
     per_day = sk.select(
         "day", F.hll_sketch_estimate("sk").alias("est_distinct")
     )
@@ -1499,7 +1519,7 @@ def read_mg_topk(
     ``est_lower ≤ true ≤ est_lower + Σdec`` stays a hard guarantee because
     vector-adding MG summaries IS the MG merge (Agarwal et al.). Never
     re-reads raw events; input is O(batches × capacity) rows."""
-    state = spark.read.parquet(target_dir)
+    state = _read_state(spark, target_dir)
     dec_total = state.filter(F.col(key_col).isNull()).agg(
         F.coalesce(F.sum("dec"), F.lit(0)).alias("dec_total")
     )
@@ -1681,7 +1701,7 @@ def read_bloom_contains(
         bloom_positions,
     )
 
-    bits = spark.read.parquet(target_dir)
+    bits = _read_state(spark, target_dir)
     probe = candidates.select(
         key_col,
         F.explode(bloom_positions(F.col(key_col), m=m, k=k)).alias("pos"),

@@ -57,34 +57,44 @@ DDL = {
 
 
 def read_report_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Task-1 output CSV → DataFrame (reference pd.read_csv, :406)."""
-    return spark.read.option("header", True).schema(REPORT_CSV_SCHEMA).csv(path)
+    """Task-1 output CSV path or glob → DataFrame (reference pd.read_csv,
+    :406), each row with its own file's path as ``source_file`` (the
+    dead-letter provenance)."""
+    return (
+        spark.read.option("header", True)
+        .schema(REPORT_CSV_SCHEMA)
+        .csv(path)
+        .select("*", F.col("_metadata.file_path").alias("source_file"))
+    )
 
 
 def prepare_report(df: DataFrame) -> DataFrame:
-    """date + hour → datetime key, casts, audit timestamp, load order
-    (reference prepare_data, warehouse.py:331-389 — minus the row-wise
-    .apply; the composition is one vectorized expression, F9). A NULL date
-    or hour keys to a NULL datetime."""
+    """date + hour → datetime key, casts, audit timestamp (reference
+    prepare_data, warehouse.py:331-389 — minus the row-wise .apply; the
+    composition is one vectorized expression, F9). A NULL date or hour keys
+    to a NULL datetime. ``current_timestamp()`` is fixed once per query, so
+    every row a single action reads carries the same audit stamp. The load
+    order is the staging insert's ``ORDER BY datetime``."""
     return df.select(
         compose_datetime("date", "hour").alias("datetime"),
         F.col("impression_count").cast("long"),
         F.col("click_count").cast("long"),
         F.current_timestamp().alias("audit_loaded_datetime"),
-    ).orderBy("datetime")
+        "source_file",
+    )
 
 
-def validate_report(prepared: DataFrame, source_file: str) -> Q.SplitResult:
+def validate_report(prepared: DataFrame) -> Q.SplitResult:
     """V1-V4 over the prepared frame (reference validate_data,
     warehouse.py:91-177). Non-fatal: caller loads `valid`, dead-letters
-    `invalid`."""
+    `invalid` (each row keeps its own ``source_file``)."""
     Q.required_columns(prepared, ["datetime", "impression_count", "click_count"])
     rules = [
         Q.null_rule(["datetime", "impression_count", "click_count"]),
         Q.negative_rule(["impression_count", "click_count"]),
         Q.clicks_exceed_impressions_rule(),
     ]
-    return Q.split_valid_invalid(prepared, rules, source_file=source_file)
+    return Q.split_valid_invalid(prepared, rules)
 
 
 def verify_load(connection, table: str = "client_report") -> dict:

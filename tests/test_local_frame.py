@@ -3,9 +3,10 @@ schema they already know.
 
 ``sources/tables.py:local_frame`` must give the same rows and schema as
 ``createDataFrame(list)`` for every shape the package builds, as a
-``LocalTableScan``. Snapshot and state reads given their recorded schema
-must run no Spark job to build the frame (a schema-inference job each
-before), and an IVF-PQ query runs its two side-table reads and one probe
+``LocalTableScan``. Snapshot and state reads given their recorded schema,
+and the streaming state readers reading it from the parquet footer, must
+run no Spark job to build the frame (a schema-inference job each before),
+and an IVF-PQ query runs its two side-table reads and one probe
 scan — three jobs.
 """
 
@@ -151,6 +152,36 @@ def test_state_read_builds_its_frame_without_a_job(spark, tmp_path):
         current = _recover_and_read(spark, target, new.schema)
     assert ids == []
     assert current.collect() == new.collect()
+
+
+def test_cohort_read_builds_its_frame_without_a_job(spark, tmp_path):
+    """The state readers take the schema Spark recorded in the state's
+    parquet footer: building the cohort frame over its two state
+    components runs no schema-inference job; a missing state dir still
+    raises at read time."""
+    from pyspark.errors import AnalysisException
+
+    from data_engineering_project_spark.streaming.pipeline import (
+        read_cohort_retention,
+        upsert_cohort_state,
+    )
+
+    target = str(tmp_path / "cohort")
+    batch = spark.createDataFrame(
+        [
+            (1, datetime.datetime(2024, 1, 1, 10, 0)),
+            (1, datetime.datetime(2024, 1, 9, 10, 0)),
+            (2, datetime.datetime(2024, 1, 2, 10, 0)),
+        ],
+        "user_id bigint, ts timestamp",
+    )
+    upsert_cohort_state(target, time_col="ts")(batch, 0)
+    with _jobs(spark) as ids:
+        cohort = read_cohort_retention(spark, target)
+    assert ids == []
+    assert [tuple(r) for r in cohort.collect()] == [("2024-01-01", 0, 2), ("2024-01-01", 1, 1)]
+    with pytest.raises(AnalysisException):
+        read_cohort_retention(spark, str(tmp_path / "missing"))
 
 
 def test_ivfpq_query_runs_three_jobs(spark, tmp_path):

@@ -113,6 +113,48 @@ def test_csv_files_match_reference_layout(result):
     assert h12["date"] == "2022-05-27"
 
 
+# task1_output_2022-05-27.csv byte for byte as the partitioned Spark CSV
+# write produced it: date column first, rows in hour order, "\n" line ends
+GOLDEN_CSV_0527 = (
+    b"date,hour,impression_count,click_count\n"
+    b"2022-05-27,0,0,0\n"
+    b"2022-05-27,1,0,0\n"
+    b"2022-05-27,2,0,0\n"
+    b"2022-05-27,3,0,0\n"
+    b"2022-05-27,4,0,0\n"
+    b"2022-05-27,5,0,0\n"
+    b"2022-05-27,6,0,0\n"
+    b"2022-05-27,7,0,0\n"
+    b"2022-05-27,8,0,0\n"
+    b"2022-05-27,9,0,0\n"
+    b"2022-05-27,10,0,0\n"
+    b"2022-05-27,11,0,10\n"
+    b"2022-05-27,12,10,20\n"
+    b"2022-05-27,13,0,0\n"
+    b"2022-05-27,14,0,0\n"
+    b"2022-05-27,15,0,0\n"
+    b"2022-05-27,16,0,0\n"
+    b"2022-05-27,17,0,0\n"
+    b"2022-05-27,18,0,0\n"
+    b"2022-05-27,19,0,0\n"
+    b"2022-05-27,20,0,0\n"
+    b"2022-05-27,21,0,0\n"
+    b"2022-05-27,22,0,0\n"
+    b"2022-05-27,23,0,0\n"
+)
+
+
+def test_csv_bytes_pinned(result):
+    _, out_dir = result
+    with open(os.path.join(out_dir, "task1_output_2022-05-27.csv"), "rb") as f:
+        assert f.read() == GOLDEN_CSV_0527
+    # no staging directory or temporary file left beside the reports
+    assert sorted(os.listdir(out_dir)) == [
+        "task1_output_2022-05-26.csv",
+        "task1_output_2022-05-27.csv",
+    ]
+
+
 def test_other_user_agent_filtered_out(result):
     res, _ = result
     # every fixture file carries 1 extra row with a different UA; none of
@@ -165,7 +207,7 @@ def test_cli_batch_mode(spark, landing_dir, tmp_path_factory, capsys):
 def test_observation_metrics_collected_without_extra_jobs(result):
     """df.observe replaces the reference's >=8 eager logging actions per
     date (data_processing.py:134-291): the counts come back as a side
-    effect of the CSV-write action."""
+    effect of the report's collect."""
     res, _ = result
     metrics = res.observation.get
     # 26 target-UA rows from FIXTURE_FILES + 2 rows in the malformed file

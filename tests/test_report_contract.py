@@ -10,8 +10,8 @@ with ``pipeline.select_report_rows``, so neither counts the other UA, the
 ``views`` rows or the malformed file's rows; the batch run dead-letters
 the last two.
 
-The batch CLI reports its dead-letter count from the write job's own
-observation, so no ``count()`` runs after the write. ``cli stream`` honours
+The batch CLI reports its dead-letter count from the observation that the
+report's one collect fills, so no ``count()`` runs after it. ``cli stream`` honours
 ``--user-agent`` and, without ``--available-now``, waits on its query.
 """
 

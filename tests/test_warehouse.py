@@ -141,7 +141,7 @@ def test_prepare_and_validate_spark_side(spark, tmp_path):
     )
     df = W.read_report_csv(spark, str(csv))
     prepared = W.prepare_report(df)
-    res = W.validate_report(prepared, source_file=csv.name)
+    res = W.validate_report(prepared)
     valid = res.valid.collect()
     invalid = res.invalid.collect()
     # clicks>impressions rows routed (both h11 and h12), h13 clean
@@ -152,7 +152,8 @@ def test_prepare_and_validate_spark_side(spark, tmp_path):
         "2022-05-27 12:00:00",
     }
     assert all(r["validation_error"] == "Clicks exceed impressions" for r in invalid)
-    assert all(r["source_file"] == csv.name for r in invalid)
+    # provenance is the row's own file (``_metadata.file_path``)
+    assert all(r["source_file"].endswith("/" + csv.name) for r in invalid)
 
 
 def test_cli_load_end_to_end(spark, tmp_path, capsys):
@@ -248,3 +249,83 @@ def test_cli_load_failed_merge_leaves_dead_letter_unchanged(spark, tmp_path):
     con = duckdb.connect(db)
     assert con.execute("SELECT * FROM client_report_invalid").fetchall() == before
     con.close()
+
+
+def _report_csv(path, day: str, rows) -> str:
+    path.write_text(
+        "date,hour,impression_count,click_count\n"
+        + "".join(f"{day},{h},{i},{c}\n" for h, i, c in rows)
+    )
+    return str(path)
+
+
+def test_cli_load_dead_letter_keeps_each_rows_own_file(spark, tmp_path):
+    """A delivery read by glob stamps each dead-letter row with the file it
+    came from, not the glob: re-delivering one of the files by its own path
+    upserts its row instead of adding a second one for the same datetime."""
+    import duckdb
+
+    from data_engineering_project_spark.cli import main
+
+    db = str(tmp_path / "wh.duckdb")
+    day26 = _report_csv(
+        tmp_path / "task1_output_2022-05-26.csv", "2022-05-26", [(11, 4, 0), (20, -1, 0)]
+    )
+    _report_csv(
+        tmp_path / "task1_output_2022-05-27.csv", "2022-05-27", [(11, 4, 0), (20, 1, 5)]
+    )
+    glob_path = str(tmp_path / "task1_output_*.csv")
+    assert main(["load", "--csv", glob_path, "--db", db]) == 0
+    assert main(["load", "--csv", day26, "--db", db]) == 0
+    con = duckdb.connect(db)
+    rows = con.execute(
+        "SELECT source_file FROM client_report_invalid ORDER BY datetime"
+    ).fetchall()
+    con.close()
+    assert len(rows) == 2
+    assert rows[0][0].endswith("task1_output_2022-05-26.csv")
+    assert rows[1][0].endswith("task1_output_2022-05-27.csv")
+
+
+def test_cli_load_stamps_one_audit_time_per_delivery(spark, tmp_path):
+    """A staged row and its dead-letter copy carry the same
+    ``audit_loaded_datetime``: the delivery is read by one action."""
+    import duckdb
+
+    from data_engineering_project_spark.cli import main
+
+    db = str(tmp_path / "wh.duckdb")
+    csv = _report_csv(
+        tmp_path / "task1_output_2022-05-26.csv",
+        "2022-05-26",
+        [(11, 4, 0), (19, 1, 3), (20, -1, 0)],
+    )
+    assert main(["load", "--csv", csv, "--db", db]) == 0
+    con = duckdb.connect(db)
+    n_joined, n_differ = con.execute(
+        """SELECT count(*), count(*) FILTER (
+                   WHERE r.audit_loaded_datetime IS DISTINCT FROM i.audit_loaded_datetime)
+           FROM client_report r JOIN client_report_invalid i USING (datetime)"""
+    ).fetchone()
+    con.close()
+    assert (n_joined, n_differ) == (2, 0)
+
+
+def test_cli_load_runs_one_spark_job(spark, tmp_path, capsys):
+    """The load reads, keys and validates the delivery in one Spark action:
+    no second read for the dead letter, no range-sort sampling job (the
+    load order is the staging insert's ``ORDER BY``)."""
+    from data_engineering_project_spark.cli import main
+    from tests.test_local_frame import _jobs
+
+    db = str(tmp_path / "wh.duckdb")
+    _report_csv(
+        tmp_path / "task1_output_2022-05-26.csv", "2022-05-26", [(19, 10, 0), (11, 4, 9)]
+    )
+    _report_csv(tmp_path / "task1_output_2022-05-27.csv", "2022-05-27", [(3, 1, 0)])
+    glob_path = str(tmp_path / "task1_output_*.csv")
+    with _jobs(spark) as ids:
+        assert main(["load", "--csv", glob_path, "--db", db]) == 0
+    assert len(ids) == 1, sorted(ids)
+    summary = capsys.readouterr().out.strip().splitlines()[-1]
+    assert '"record_count": "3"' in summary and '"invalid_rows": "1"' in summary
