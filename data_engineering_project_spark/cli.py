@@ -410,7 +410,16 @@ def _run_load(spark, args) -> None:
         execute_merge,
     )
 
-    split = W.validate_report(W.prepare_report(W.read_report_csv(spark, args.csv)))
+    from pyspark.errors import AnalysisException
+
+    try:
+        report = W.read_report_csv(spark, args.csv)
+    except AnalysisException as exc:
+        # a cron tick that runs before the batch has written any CSV
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        raise FileNotFoundError(f"no CSV matches {args.csv}") from None
+    split = W.validate_report(W.prepare_report(report))
     # one action reads the whole delivery, each row tagged with its first
     # violated rule (NULL when valid): the FULL batch is staged (reference
     # warehouse.py:411-466 loads every row into client_report; invalid rows
@@ -531,12 +540,12 @@ def _run_index(spark, args) -> int:
 
     if args.action == "build":
         if args.pq:
-            ai.build_ivfpq_index(emb, args.table, k_cells=args.k_cells)
+            fit = ai.build_ivfpq_index(emb, args.table, k_cells=args.k_cells)
+            kind = f"ivfpq, k_cells={args.k_cells}, fit={fit}"
         else:
             ai.build_ivf_index(emb, args.table, k=args.k_cells)
-        v = st.current_version(args.table)
-        kind = "ivfpq" if args.pq else "ivf"
-        print(f"{args.table} v{v} ({kind}, k_cells={args.k_cells})")
+            kind = f"ivf, k_cells={args.k_cells}"
+        print(f"{args.table} v{st.current_version(args.table)} ({kind})")
     elif args.action == "append":
         if args.pq:
             print("append: PQ indexes absorb new data by rebuild", file=sys.stderr)

@@ -15,7 +15,12 @@ against a DuckDB oracle running the identical algorithm):
   MLlib uses. Data never moves; per iteration one scan computes
   assignments and one narrow (k×dim)-row aggregate updates the state.
   Plan depth is CONSTANT per iteration (each rebuilds from the persisted
-  points), so no lineage blow-up and no checkpoint needed.
+  points), so no lineage blow-up and no checkpoint needed. When the
+  points themselves fit the driver budget, the rounds run there too:
+  :func:`_lloyd_rounds_local` replays them on collected rows with the
+  same kernel, sums and division, so the books are equal and the fit
+  costs no Spark job (the IVF-PQ build's driver branch,
+  ``operators/ann_index.py:_fit_ivfpq_on_driver``).
 - **Explicit tie-break**: a point equidistant to two centroids goes to the
   smaller cluster id via lexicographic ``(dist, cid)`` comparison —
   ``array_min`` over structs here, ``arg_min(cid, [dist, cid])`` in the
@@ -494,6 +499,38 @@ def _lloyd_books_multi(
             }
             for s in range(n_sub)
         ]
+    return books
+
+
+def _lloyd_rounds_local(
+    vec,
+    hn,
+    books: list[dict[int, list[float]]],
+    *,
+    sub: int,
+    n_iter: int,
+    strict_len: bool = False,
+) -> list[dict[int, list[float]]]:
+    """The ``n_iter - 1`` recompute rounds of :func:`_lloyd` (one
+    whole-vector book, ``strict_len=True``) or :func:`_lloyd_books_multi`
+    on rows the driver holds, every one of them well-formed (the caller
+    gates on ``split_rows``' fast mask). The same assignment kernel
+    (:func:`_make_codes_matrix`), the same exact int64 sums, the same
+    Python ``sum / n`` division and the same empty-cluster rule, so the
+    books equal the distributed fit's."""
+    for _ in range(n_iter - 1):
+        codes, _, Xi = _make_codes_matrix(books, sub, strict_len)(vec, hn)
+        new_books = []
+        for s, book in enumerate(books):
+            W = Xi[:, s * sub : (s + 1) * sub]
+            new = {}
+            for cid in sorted(book):
+                mask = codes[:, s] == cid
+                n = int(mask.sum())
+                # empty clusters keep their previous centroid
+                new[cid] = [int(v) / n for v in W[mask].sum(axis=0)] if n else book[cid]
+            new_books.append(new)
+        books = new_books
     return books
 
 

@@ -75,7 +75,6 @@ def select_report_rows(
             Q.domain_rule("event_hour", 0, 23, name="Invalid hour"),
             Q.Rule("Unknown event type", ~F.col("event_type").isin(*TYPE_COLUMNS)),
         ],
-        source_file=F.col("source_file"),
         observe=not events.isStreaming,
     )
 

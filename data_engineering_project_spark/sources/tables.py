@@ -128,7 +128,9 @@ def local_frame(
     ``Row``s (positional, as in ``createDataFrame``) or ``[]``. Values go
     through ``StructType.toInternal`` first, so timestamps and dates keep
     ``createDataFrame``'s semantics (a naive datetime is local wall-clock
-    time of the driver process)."""
+    time of the driver process). ``rows`` may also be a ``pyarrow.Table``
+    with the schema's column names: it is cast to the schema's Arrow types
+    as it stands, with no per-row conversion."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -138,6 +140,8 @@ def local_frame(
         else T._parse_datatype_string(schema)
     )
     arrow = to_arrow_schema(struct)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows.cast(arrow), struct)
     internal = [struct.toInternal(r) for r in rows]
     columns = list(zip(*internal)) if internal else [()] * len(arrow)
     table = pa.Table.from_arrays(

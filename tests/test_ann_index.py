@@ -218,14 +218,24 @@ def test_ivfpq_index_stores_codes_not_vectors(spark, clustered, tmp_path):
     assert len(row["codes"]) == 4 and all(0 <= c < 8 for c in row["codes"])
 
 
-def test_ivfpq_query_finds_the_querys_own_cluster(spark, clustered, tmp_path):
+def test_ivfpq_query_finds_the_querys_own_cluster(
+    spark, clustered, tmp_path, monkeypatch
+):
+    """Built on the distributed branch (the driver budget forced to 0), so
+    the end-to-end build → query path of a corpus too large for the driver
+    stays covered."""
+    from data_engineering_project_spark.operators import ann_index
     from data_engineering_project_spark.operators.ann_index import (
         build_ivfpq_index,
         query_ivfpq_index,
     )
 
+    monkeypatch.setattr(ann_index, "_IVFPQ_DRIVER_MAX_ELEMS", 0)
     table = str(tmp_path / "pq")
-    build_ivfpq_index(clustered, table, k_cells=5, n_sub=4, k_codes=8)
+    assert (
+        build_ivfpq_index(clustered, table, k_cells=5, n_sub=4, k_codes=8)
+        == "distributed"
+    )
     # query with a member of cluster 2 (vec_ids 80..119): every top-10
     # neighbor must come from the same tight cluster, any probe width
     target = clustered.filter("vec_id = 85").collect()[0]
@@ -778,3 +788,151 @@ def test_streaming_knn_reserve_with_fewer_rows_drops_stale_ranks(
     rows = snap.read_table(spark, out).collect()
     assert len(rows) == 2 * 3, "stale higher ranks survived the re-serve"
     assert {r["rank"] for r in rows} == {1, 2, 3}
+
+
+# ---- the driver-sized IVF-PQ build ----------------------------------------
+
+
+def _clustered_rows(seed: int, n_clusters: int = 5, per: int = 40, dim: int = 16):
+    rng = np.random.RandomState(seed)
+    centers = rng.uniform(-1, 1, size=(n_clusters, dim)) * 5
+    return [
+        (c * per + i, [float(x) for x in centers[c] + rng.normal(0, 0.1, dim)])
+        for c in range(n_clusters)
+        for i in range(per)
+    ]
+
+
+def _index_state(spark, table):
+    """Every row of the codes table and both side tables, each table's
+    schema, and each data file's row count and ``cell`` range."""
+    out = {}
+    for t in (table, table + "__pq_centroids", table + "__pq_codebooks"):
+        m = snap.read_manifest(t)
+        rows = sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in snap.read_table(spark, t).collect()
+        )
+        files = sorted((f["rows"], str(f["stats"])) for f in m.files)
+        out[t[len(table):]] = (rows, m.schema, files)
+    return out
+
+
+def _build_both(monkeypatch, frame, tmp_path, **kw):
+    """Build on the default (driver-sized) branch and on the distributed
+    branch; return both branches' names and index tables."""
+    from data_engineering_project_spark.operators import ann_index as ai
+
+    d, x = str(tmp_path / "driver"), str(tmp_path / "distributed")
+    got_d = ai.build_ivfpq_index(frame, d, **kw)
+    with monkeypatch.context() as m:
+        m.setattr(ai, "_IVFPQ_DRIVER_MAX_ELEMS", 0)
+        got_x = ai.build_ivfpq_index(frame, x, **kw)
+    return (got_d, d), (got_x, x)
+
+
+@pytest.mark.parametrize(
+    "seed,k_cells,n_sub,k_codes",
+    [(0, 4, 4, 8), (1, 5, 2, 4), (2, 6, 8, 4), (3, 8, 4, 16), (4, 4, 2, 8)],
+)
+def test_ivfpq_driver_build_equals_distributed(
+    spark, monkeypatch, tmp_path, seed, k_cells, n_sub, k_codes
+):
+    """The driver-sized fit writes the distributed build's tables row for
+    row, with the same schemas and per-file ``cell`` ranges, so queries
+    answer the same."""
+    from data_engineering_project_spark.operators.ann_index import (
+        query_ivfpq_index,
+    )
+
+    rows = _clustered_rows(seed)
+    frame = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    (got_d, d), (got_x, x) = _build_both(
+        monkeypatch, frame, tmp_path, k_cells=k_cells, n_sub=n_sub, k_codes=k_codes
+    )
+    assert (got_d, got_x) == ("driver", "distributed")
+    assert _index_state(spark, d) == _index_state(spark, x)
+    for vid in (3, 77, 150):
+        qa = query_ivfpq_index(spark, d, rows[vid][1], k=10, nprobe=2).collect()
+        qb = query_ivfpq_index(spark, x, rows[vid][1], k=10, nprobe=2).collect()
+        assert qa == qb
+
+
+def test_ivfpq_driver_build_equals_distributed_on_clustered(
+    spark, monkeypatch, clustered, tmp_path
+):
+    from data_engineering_project_spark.operators.ann_index import (
+        query_ivfpq_index,
+    )
+
+    (got_d, d), (got_x, x) = _build_both(
+        monkeypatch, clustered, tmp_path, k_cells=5, n_sub=4, k_codes=8
+    )
+    assert (got_d, got_x) == ("driver", "distributed")
+    assert _index_state(spark, d) == _index_state(spark, x)
+    q = [float(v) for v in clustered.filter("vec_id = 85").collect()[0]["embedding"]]
+    assert (
+        query_ivfpq_index(spark, d, q, k=10, nprobe=5).collect()
+        == query_ivfpq_index(spark, x, q, k=10, nprobe=5).collect()
+    )
+
+
+def _outcome(spark, fn, table):
+    try:
+        branch = fn()
+    except Exception as exc:  # the error itself is the result compared
+        return ("raised", type(exc).__name__, str(exc).splitlines()[0])
+    return ("built", branch, _index_state(spark, table))
+
+
+_GOOD = [[1.0, 2.0, 3.0, 4.0], [1.1, 2.0, 3.0, 4.1], [-3.0, 0.5, 1.0, 2.0]] * 4
+
+
+@pytest.mark.parametrize(
+    "hostile,n_sub",
+    [
+        ("null_vector", 2),
+        ("null_element", 2),
+        ("short_row", 2),
+        ("long_row", 2),
+        ("indivisible_dim", 3),
+        ("empty", 2),
+    ],
+)
+def test_ivfpq_hostile_frames_take_the_distributed_branch(
+    spark, monkeypatch, tmp_path, hostile, n_sub
+):
+    """A frame the driver fit must not take — a NULL vector or element, a
+    ragged row, a dim the subspaces do not divide, no rows — skips it and
+    gives exactly the distributed build's result or error."""
+    from data_engineering_project_spark.operators import ann_index as ai
+
+    vecs = [list(v) for v in _GOOD]
+    if hostile == "null_vector":
+        vecs[5] = None
+    elif hostile == "null_element":
+        vecs[5][2] = None
+    elif hostile == "short_row":
+        vecs[5] = vecs[5][:3]
+    elif hostile == "long_row":
+        vecs[5] = vecs[5] + [9.0]
+    elif hostile == "empty":
+        vecs = []
+    frame = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    kw = dict(k_cells=2, n_sub=n_sub, k_codes=2)
+
+    fits = []
+    fit = ai._fit_ivfpq_on_driver
+    monkeypatch.setattr(
+        ai, "_fit_ivfpq_on_driver", lambda *a, **k: fits.append(fit(*a, **k)) or fits[-1]
+    )
+    d, x = str(tmp_path / "default"), str(tmp_path / "distributed")
+    default = _outcome(spark, lambda: ai.build_ivfpq_index(frame, d, **kw), d)
+    assert fits == [None]
+    monkeypatch.setattr(ai, "_IVFPQ_DRIVER_MAX_ELEMS", 0)
+    forced = _outcome(spark, lambda: ai.build_ivfpq_index(frame, x, **kw), x)
+    assert default == forced
+    if default[0] == "built":
+        assert default[1] == "distributed"

@@ -162,3 +162,24 @@ def test_load_refuses_rows_without_date_or_hour(spark, tmp_path, capsys):
     err = capsys.readouterr().err.strip()
     assert len(err.splitlines()) == 1 and "2 row(s)" in err
     assert not db.exists()
+
+
+def test_load_on_an_empty_glob_exits_2(spark, tmp_path, capsys):
+    """A cron tick that runs before the batch has written any CSV: `load`
+    exits 2 with one line and creates no warehouse file."""
+    db = tmp_path / "wh.duckdb"
+    rc = main(
+        ["load", "--csv", str(tmp_path / "task1_output_*.csv"), "--db", str(db)]
+    )
+    assert rc == 2
+    err = capsys.readouterr().err.strip()
+    assert len(err.splitlines()) == 1 and err.startswith("load: ")
+    assert not db.exists() and os.listdir(tmp_path) == []
+
+
+def test_index_build_pq_reports_the_fit(spark, edge_dirs, tmp_path, capsys):
+    """`index build --pq` names the branch that fitted the index."""
+    _, single_sf = edge_dirs
+    idx = str(tmp_path / "pq")
+    assert main(["index", "build", idx, "--pq", "--sf-dir", single_sf]) == 0
+    assert "fit=driver" in capsys.readouterr().out

@@ -204,3 +204,42 @@ def test_ivfpq_query_runs_three_jobs(spark, tmp_path):
         hits = query_ivfpq_index(spark, table, rows[12][1], k=5, nprobe=2).collect()
     assert len(hits) == 5
     assert len(ids) <= 3, sorted(ids)
+
+
+def test_driver_sized_ivfpq_build_runs_seven_jobs_and_no_python_stage(
+    spark, tmp_path
+):
+    """A 200 × 64 build is fitted on the driver: a size probe, one bounded
+    Arrow collect and the three table writes — at most 7 jobs (the
+    distributed build runs 17 on this input), and no Arrow kernel runs in
+    a Python worker."""
+    import numpy as np
+
+    from data_engineering_project_spark.operators.ann_index import (
+        build_ivfpq_index,
+    )
+
+    rng = np.random.RandomState(5)
+    centers = rng.uniform(-1, 1, size=(4, 64))
+    rows = [
+        (i, [float(x) for x in centers[i % 4] + rng.normal(0, 0.05, 64)])
+        for i in range(200)
+    ]
+    emb = local_frame(spark, rows, "vec_id bigint, embedding array<double>")
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+        return list(conv.asJava(store.executionsList()))
+
+    before = {e.executionId() for e in executions()}
+    with _jobs(spark) as ids:
+        branch = build_ivfpq_index(emb, str(tmp_path / "pq"), k_cells=4)
+    assert branch == "driver"
+    assert 0 < len(ids) <= 7, sorted(ids)
+    plans = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in before
+    ]
+    assert plans and not any("MapInArrow" in p or "Python" in p for p in plans)
