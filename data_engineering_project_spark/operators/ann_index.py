@@ -14,7 +14,9 @@ exist:
   a probe of cell ``c`` touches only that cell's files — partition
   pruning from footer stats, no metastore. The k centroids persist in a
   tiny side table (``<table>__centroids``, k rows), overwritten atomically
-  with each rebuild.
+  with each rebuild. Side tables are bounded by spec constants (cells,
+  subspaces × codes), never by the corpus, so the driver writes and reads
+  them (``snapshot_table.write_local``/``read_local``) with no Spark job.
 - **query_ivf_index**: rank cells driver-side against the k stored
   centroids (k×dim floats — the same bounded state MLlib keeps), read ONLY
   the ``nprobe`` winning cells via manifest pruning (one scan over their
@@ -94,7 +96,6 @@ def build_ivf_index(
     scale: int = 1000,
 ) -> None:
     """Fit the coarse quantizer and materialize the cell-clustered index."""
-    spark = emb.sparkSession
     pts = emb.select(
         F.col(id_col).alias("vec_id"),
         quantize_vec(F.col(vec_col), scale).alias("q"),
@@ -103,23 +104,24 @@ def build_ivf_index(
         assigned, centroids = _lloyd(pts, k, n_iter)
         if assigned is None:
             raise ValueError("build_ivf_index: empty embedding frame")
-        rows = [(cid, centroids[cid]) for cid in sorted(centroids)]
-        cdf = local_frame(spark, rows, "cell int, centroid array<double>")
         # data files range-partitioned by cell: one file ≈ one cell, so the
         # manifest's per-file [min,max] prunes a probe to its cell's files
         data = assigned.select(
             "vec_id", F.col("cluster").alias("cell"), "q"
         ).repartitionByRange(len(centroids), "cell")
         snap.write_table(data, table, mode="overwrite", stats_cols=["cell"])
-        snap.write_table(cdf, _centroid_table(table), mode="overwrite")
+        snap.write_local(
+            [(cid, centroids[cid]) for cid in sorted(centroids)],
+            "cell int, centroid array<double>",
+            _centroid_table(table),
+            mode="overwrite",
+        )
     finally:
         pts.unpersist()
 
 
-def _load_centroids(
-    spark: SparkSession, table: str, tag: str | None = None
-) -> dict[int, list[float]]:
-    rows = snap.read_table(spark, _centroid_table(table), tag=tag).collect()
+def _load_centroids(table: str, tag: str | None = None) -> dict[int, list[float]]:
+    rows = snap.read_local(_centroid_table(table), tag=tag).to_pylist()
     return {r["cell"]: [float(v) for v in r["centroid"]] for r in rows}
 
 
@@ -141,7 +143,7 @@ def query_ivf_index(
     (d, cid) argmin.
     ``tag`` resolves a :func:`promote_index` pin — serving reads keep
     answering from the pinned generation while a rebuild commits."""
-    centroids = _load_centroids(spark, table, tag)
+    centroids = _load_centroids(table, tag)
     if not centroids:
         raise FileNotFoundError(
             f"no IVF centroid state under {_centroid_table(table)!r} — "
@@ -177,7 +179,7 @@ def append_to_ivf_index(
     centroids with the build's own final-assignment kernel, merge by id
     (redelivery replaces, never duplicates)."""
     spark = emb_new.sparkSession
-    centroids = _load_centroids(spark, table)
+    centroids = _load_centroids(table)
     if not centroids:
         raise FileNotFoundError(
             f"no IVF centroid state under {_centroid_table(table)!r} — "
@@ -333,9 +335,9 @@ def _fit_ivfpq_on_driver(
 ):
     """The IVF-PQ fit of a driver-sized ``(vec_id, q)`` frame, or None when
     the frame is not one: larger than ``_IVFPQ_DRIVER_MAX_ELEMS``, empty,
-    holding a NULL, ragged or NULL-element vector, or with ``dim`` not
-    divisible by ``n_sub``. Those keep the distributed build, with its
-    exact results and errors.
+    holding a ragged or NULL-element vector, or with ``dim`` not divisible
+    by ``n_sub`` (the build has already dropped NULL vectors). Those keep
+    the distributed build, with its exact results and errors.
 
     Spark computes ``q`` and the ``md5`` init key, so the driver sees the
     values the distributed build sees, and runs its steps with the same
@@ -448,22 +450,22 @@ def _write_ivfpq(
     *,
     scale: int,
 ) -> None:
-    """Commit the codes table and its two side tables."""
-    spark = data.sparkSession
+    """Commit the codes table (Spark: it grows with the corpus) and its
+    two side tables (the driver: cells and subspaces × codes bound them)."""
     ctab, btab = _pq_side_tables(table)
     snap.write_table(data, table, mode="overwrite", stats_cols=["cell"])
-    cents_df = local_frame(
-        spark,
+    snap.write_local(
         [(c, v, scale, sub) for c, v in sorted(cent_int.items())],
         "cell int, cvec array<bigint>, scale int, sub int",
+        ctab,
+        mode="overwrite",
     )
-    snap.write_table(cents_df, ctab, mode="overwrite")
-    bdf = local_frame(
-        spark,
+    snap.write_local(
         [(s, cid, book[cid]) for s, book in enumerate(books) for cid in sorted(book)],
         "sub int, code int, cvec array<double>",
+        btab,
+        mode="overwrite",
     )
-    snap.write_table(bdf, btab, mode="overwrite")
 
 
 def build_ivfpq_index(
@@ -488,20 +490,22 @@ def build_ivfpq_index(
     residual codebooks, codes as literal projections. Side tables hold the
     complete serving state — integer cell centroids (+ the quantization
     scale and subspace width, so a query needs no out-of-band config) and
-    the residual codebooks.
+    the residual codebooks. A row whose vector is NULL is dropped at
+    ingestion, as ``kmeans_assignments`` and ``ivfpq_topk`` drop it: it has
+    no cell and no codes, so a query must never return its id.
 
     Two branches write the same tables. A corpus of fewer than
     ``_IVFPQ_DRIVER_MAX_ELEMS`` well-formed elements is fitted on the
     driver from one bounded Arrow collect (:func:`_fit_ivfpq_on_driver`)
     and written back as a local relation; anything else — larger, empty,
-    NULL or ragged vectors, an indivisible ``dim`` — runs the distributed
-    fit. Both range-partition the codes by ``cell``, so each data file
-    covers one or few cells and ``read_where_in`` prunes a probe to its
-    cells' files. Returns the branch that ran: ``"driver"`` or
+    ragged vectors or NULL elements, an indivisible ``dim`` — runs the
+    distributed fit. Both range-partition the codes by ``cell``, so each
+    data file covers one or few cells and ``read_where_in`` prunes a probe
+    to its cells' files. Returns the branch that ran: ``"driver"`` or
     ``"distributed"``.
     """
     spark = emb.sparkSession
-    pts = emb.select(
+    pts = emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"),
         quantize_vec(F.col(vec_col), scale).alias("q"),
     )
@@ -586,15 +590,16 @@ def query_ivfpq_index(
     """ADC scan over the probed cells' CODE files: per-(cell, subspace)
     lookup tables from the query's residual, map-only projection, top-k by
     (adc, vec_id). The vectors themselves exist nowhere in the index —
-    cost per query is nprobe cells × n_sub map lookups per code row.
-    ``tag`` resolves a :func:`promote_index` pin."""
+    cost per query is nprobe cells × n_sub map lookups per code row. The
+    side tables are read on the driver, so the probe scan is the query's
+    one Spark job. ``tag`` resolves a :func:`promote_index` pin."""
     ctab, btab = _pq_side_tables(table)
-    crows = snap.read_table(spark, ctab, tag=tag).collect()
+    crows = snap.read_local(ctab, tag=tag).to_pylist()
     if not crows:
         raise FileNotFoundError(f"no PQ centroid state under {ctab!r}")
     scale, sub = crows[0]["scale"], crows[0]["sub"]
     cent_int = {r["cell"]: [int(v) for v in r["cvec"]] for r in crows}
-    brows = snap.read_table(spark, btab, tag=tag).collect()
+    brows = snap.read_local(btab, tag=tag).to_pylist()
     books: dict[int, dict[int, list[float]]] = {}
     for r in brows:
         books.setdefault(r["sub"], {})[r["code"]] = [float(v) for v in r["cvec"]]

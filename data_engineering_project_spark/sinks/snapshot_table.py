@@ -30,7 +30,9 @@ Delta PROTOCOL.md) in ~300 lines over plain parquet + POSIX renames:
   its files are immutable.
 
 Scale notes: the driver handles only manifests (O(#files) JSON);
-all row data moves through executor-side Spark jobs. File-level stats
+all row data moves through executor-side Spark jobs, except the rows of
+tables a spec constant bounds, which ``write_local``/``read_local``
+write and read on the driver with no Spark job. File-level stats
 pruning (``prune_files``) is the manifest-side twin of parquet row-group
 pruning — at 100 TB it is the difference between opening 10 and 10 000
 files for a selective predicate.
@@ -47,12 +49,14 @@ import warnings
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from data_engineering_project_spark.sources.tables import local_frame
+from data_engineering_project_spark.sources.tables import arrow_rows, local_frame
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -414,18 +418,57 @@ def write_table(
 ) -> Manifest:
     """Commit ``df`` as the next table version (``append`` keeps the
     previous file set by reference; ``overwrite`` starts a fresh one)."""
+    return _write_version(
+        table,
+        mode,
+        df.schema,
+        lambda: _write_snapshot_files(df, table, stats_cols),
+    )
+
+
+def write_local(
+    rows,
+    schema: T.StructType | str,
+    table: str,
+    *,
+    mode: str = "append",
+    stats_cols: Sequence[str] = (),
+) -> Manifest:
+    """:func:`write_table` for rows the driver holds (``rows``/``schema`` as
+    in ``sources/tables.py:local_frame``): pyarrow writes them as one
+    parquet file under a fresh snapshot dir, and the manifest records the
+    file's footer stats and the Spark schema, so Spark's :func:`read_table`
+    and :func:`read_local` both read it. No Spark job runs. For tables a
+    spec constant bounds (an index's centroids and codebooks), where
+    Spark's per-write job and file commit cost more than the rows."""
+    arrow, struct = arrow_rows(rows, schema)
+
+    def _write_file() -> list[dict]:
+        rel = os.path.join(_DATA_DIR, uuid.uuid4().hex[:12], "part-00000.parquet")
+        os.makedirs(os.path.dirname(os.path.join(table, rel)))
+        pq.write_table(arrow, os.path.join(table, rel))
+        return [_file_entry(table, rel, stats_cols)]
+
+    return _write_version(table, mode, struct, _write_file)
+
+
+def _write_version(
+    table: str, mode: str, schema: T.StructType, write_files
+) -> Manifest:
+    """Commit the files ``write_files()`` writes as the next version, under
+    a lease: ``append`` keeps the previous file set by reference and evolves
+    the schema additively, ``overwrite`` starts a fresh one."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     lease = _begin_lease(table)
     try:
         base = current_version(table)
         prior_files: list[dict] = []
-        schema = df.schema
         if base is not None and mode == "append":
             prior_m = read_manifest(table, base)
             prior_files = prior_m.files
-            schema = _evolve_schema(prior_m, df.schema)
-        entries = _write_snapshot_files(df, table, stats_cols)
+            schema = _evolve_schema(prior_m, schema)
+        entries = write_files()
         return _commit(
             table,
             Manifest(
@@ -484,6 +527,46 @@ def read_table(
     that schema, not a refusal (found by the model-based sweep — a delete
     that emptied the table used to make every later read AND merge_upsert
     crash)."""
+    m = _selected_manifest(table, version, tag, as_of)
+    return _read_files(spark, table, [f["path"] for f in m.files], m.schema)
+
+
+def read_local(
+    table: str,
+    *,
+    version: int | None = None,
+    tag: str | None = None,
+    as_of: float | None = None,
+):
+    """:func:`read_table` on the driver, as a ``pyarrow.Table``: the same
+    version selectors, rows and manifest schema (as Arrow types; a file
+    written before a column was added reads it as NULL), with no Spark job.
+    For tables a spec constant bounds; reads any table's files, whoever
+    wrote them."""
+    m = _selected_manifest(table, version, tag, as_of)
+    parts = [pq.ParquetFile(os.path.join(table, f["path"])).read() for f in m.files]
+    if m.schema is None:
+        return pa.concat_tables(parts, promote_options="default")
+    want = to_arrow_schema(T.StructType.fromJson(json.loads(m.schema)))
+    conformed = [
+        pa.Table.from_arrays(
+            [
+                p.column(f.name).cast(f.type)
+                if f.name in p.column_names
+                else pa.nulls(p.num_rows, f.type)
+                for f in want
+            ],
+            schema=want,
+        )
+        for p in parts
+    ]
+    return pa.concat_tables(conformed) if conformed else want.empty_table()
+
+
+def _selected_manifest(
+    table: str, version: int | None, tag: str | None, as_of: float | None
+) -> Manifest:
+    """The manifest :func:`read_table`'s selectors pick."""
     if sum(x is not None for x in (version, tag, as_of)) > 1:
         raise ValueError("pass at most one of version / tag / as_of")
     if tag is not None:
@@ -493,7 +576,7 @@ def read_table(
     m = read_manifest(table, version)
     if not m.files and m.schema is None:
         raise ValueError(f"version {m.version} of {table!r} holds no files")
-    return _read_files(spark, table, [f["path"] for f in m.files], m.schema)
+    return m
 
 
 def prune_files(m: Manifest, col: str, lo, hi) -> list[dict]:

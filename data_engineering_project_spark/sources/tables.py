@@ -124,6 +124,15 @@ def local_frame(
     consumer then starts ``defaultParallelism`` Python tasks (each pays the
     worker's per-task import set-up) to re-serialize a handful of rows.
 
+    ``rows`` and ``schema`` are as in :func:`arrow_rows`."""
+    table, struct = arrow_rows(rows, schema)
+    return spark.createDataFrame(table, struct)
+
+
+def arrow_rows(rows, schema: T.StructType | str):
+    """``rows`` as a ``pyarrow.Table`` of ``schema``'s Arrow types, and
+    ``schema`` as a ``StructType``.
+
     ``schema`` is a DDL string or a ``StructType``; ``rows`` are tuples or
     ``Row``s (positional, as in ``createDataFrame``) or ``[]``. Values go
     through ``StructType.toInternal`` first, so timestamps and dates keep
@@ -141,14 +150,14 @@ def local_frame(
     )
     arrow = to_arrow_schema(struct)
     if isinstance(rows, pa.Table):
-        return spark.createDataFrame(rows.cast(arrow), struct)
+        return rows.cast(arrow), struct
     internal = [struct.toInternal(r) for r in rows]
     columns = list(zip(*internal)) if internal else [()] * len(arrow)
     table = pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)],
         schema=arrow,
     )
-    return spark.createDataFrame(table, struct)
+    return table, struct
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -819,6 +819,24 @@ def read_ewma_trend(
     ).orderBy("event_type")
 
 
+def _cohort_table(target_dir: str) -> str:
+    """The cohort state table under ``target_dir``; refuses a dir in the
+    old two-component layout (``first_touch/`` beside a ``user_weeks/``
+    without ``first_ts``), whose ``user_weeks`` would read as a NULL
+    ``first_ts`` and lose every cohort. An old writer killed between its
+    ``first_touch`` swap renames left only ``first_touch_old/``."""
+    if any(
+        os.path.isdir(os.path.join(target_dir, d))
+        for d in ("first_touch", "first_touch_old")
+    ):
+        raise ValueError(
+            f"cohort state dir {target_dir!r} is in the old two-component "
+            "layout (first_touch/, user_weeks/ without first_ts); replay "
+            "the stream into a fresh dir to rebuild it"
+        )
+    return os.path.join(target_dir, "user_weeks")
+
+
 def upsert_cohort_state(
     target_dir: str,
     *,
@@ -837,95 +855,59 @@ def upsert_cohort_state(
     from state, so late/out-of-order history converges to the true batch
     answer instead of freezing the first observation.
 
-    Two state components, and — unlike the EWMA daily sums, which are
-    additive counters needing the ``(…, batch_id)`` replace protocol —
-    BOTH merges are replay-IDEMPOTENT:
+    One state table, ``user_weeks``: ``(user_id, active_week, first_ts =
+    min(event ts))`` per user and active week. Each micro-batch
+    pre-aggregates its events to those rows and commits once through
+    :func:`_commit_state`; the merge is union then ``min`` per
+    ``(user_id, active_week)``. Unlike the EWMA daily sums, which are
+    additive counters needing the ``(…, batch_id)`` replace protocol, that
+    merge is replay-IDEMPOTENT (min is idempotent and commutative), so a
+    crash-replayed batch re-merges to the identical fixpoint, and a
+    writer killed inside the swap heals on replay through the swap's own
+    recovery. No ``batch_id`` column, no replace step, no checkpoint.
 
-      - ``first_touch``: per-user ``min(event ts)`` — min is idempotent
-        and commutative, so re-merging a crash-replayed batch is a no-op;
-      - ``user_weeks``: the distinct ``(user, active_week)`` set — set
-        union, same property.
-
-    That idempotence also covers the PARTIAL-application crash window: a
-    writer that died between the two component swaps leaves one component
-    ahead of the other, and the replayed batch re-merges both to the
-    identical fixpoint (the test kills the writer between components and
-    asserts exactly this). No ``batch_id`` column, no replace step.
-
-    Scale shape: state is bounded by #users (first_touch) and
-    #users × #active-weeks (user_weeks) — the same cardinality the batch
-    query's DISTINCT shuffles — never by event volume; each batch merges
-    its pre-aggregated partials (a per-batch groupBy/distinct, map-side
-    combined) against the state, and the reader never re-scans raw
-    events. Reference analog: src/Task2 cron re-aggregation; this keeps
-    the grid continuously current instead."""
+    Scale shape: state is bounded by #users × #active-weeks — the same
+    cardinality the batch query's DISTINCT shuffles — never by event
+    volume; each batch merges its pre-aggregated partials (a per-batch
+    groupBy, map-side combined) against the state, and the reader never
+    re-scans raw events. Reference analog: src/Task2 cron re-aggregation;
+    this keeps the grid continuously current instead."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        # ONE pre-aggregate per batch (r14): both state components derive
-        # from (user, week) -> min(ts) — first_touch is the min of the
-        # per-week mins (exact partition refinement) and user_weeks is the
-        # groupBy key set (= the old DISTINCT). The old form scanned and
-        # shuffled the batch TWICE (once per component) — half of each
-        # writer invocation's ~0.9 s in tools/ab_cohort_serving.py. The
-        # persisted frame is state-sized (users × active weeks), never
-        # event-sized.
-        # localCheckpoint, not persist: a persisted plan pins the pre-AQE
-        # 64-partition shuffle output (cached plans bypass AQE coalescing
-        # by default) and its materialization job cost MORE than the scan
-        # it saved (tools/ab_cohort_serving.py v1); the checkpoint
-        # materializes the post-AQE coalesced partitions eagerly and both
-        # component merges read state-sized blocks. The blocks are FREED per
-        # call — a long-running stream would otherwise accumulate one
-        # checkpoint per batch for the session (the r13 localCheckpoint
-        # session-degradation failure mode).
-        from data_engineering_project_spark.operators.components import (
-            checkpoint,
-            release,
-        )
-
-        pre = checkpoint(
+        _commit_state(
+            _cohort_table(target_dir),
             batch_df.groupBy(
                 F.col(user_col).alias("user_id"),
                 F.date_trunc("week", F.col(time_col)).alias("active_week"),
-            ).agg(F.min(time_col).alias("first_ts"))
+            ).agg(F.min(time_col).alias("first_ts")),
+            lambda current, new: current.unionByName(new)
+            .groupBy("user_id", "active_week")
+            .agg(F.min("first_ts").alias("first_ts")),
         )
-        try:
-            _commit_state(
-                os.path.join(target_dir, "first_touch"),
-                pre.groupBy("user_id").agg(F.min("first_ts").alias("first_ts")),
-                lambda current, new: current.unionByName(new)
-                .groupBy("user_id")
-                .agg(F.min("first_ts").alias("first_ts")),
-            )
-            _commit_state(
-                os.path.join(target_dir, "user_weeks"),
-                pre.select("user_id", "active_week"),
-                _set_union,
-            )
-        finally:
-            release(pre)
 
     return _write
 
 
 def read_cohort_retention(spark: SparkSession, target_dir: str) -> DataFrame:
     """Cohort-retention grid re-derived from the maintained state — a pure
-    function of ``first_touch`` ⋈ ``user_weeks`` (never a raw-event
-    re-scan), emitting the batch twin's exact shapes: cohort week =
-    week-truncated first touch, offset = whole weeks between cohort and
-    active week, n_users = pairs per cell. Bit-identical to
+    function of the ``user_weeks`` table (never a raw-event re-scan), in
+    the batch twin's shape: cohort week = week-truncated
+    ``min(first_ts) over (partition by user_id)`` (the first touch, as
+    ``events_cohort_retention`` takes ``min(ts)`` over the user's events),
+    offset = whole weeks between cohort and active week, n_users = state
+    rows per cell (one per user and active week). Bit-identical to
     ``events_cohort_retention`` over the same events for any batch split
     (the test asserts both a time split and an interleaved split). The
-    state join keys on user_id only, so it broadcasts when first_touch is
-    small and shuffles on the user key otherwise — same exchange the
-    batch window pays."""
-    ft = _read_state(spark, os.path.join(target_dir, "first_touch"))
-    uw = _read_state(spark, os.path.join(target_dir, "user_weeks"))
-    cohort = ft.select(
-        "user_id", F.date_trunc("week", F.col("first_ts")).alias("cohort_week")
+    window shuffles on the user key, the same exchange the batch window
+    pays."""
+    from pyspark.sql import Window
+
+    uw = _read_state(spark, _cohort_table(target_dir))
+    cohort_week = F.date_trunc(
+        "week", F.min("first_ts").over(Window.partitionBy("user_id"))
     )
     return (
-        uw.join(cohort, "user_id")
+        uw.select("active_week", cohort_week.alias("cohort_week"))
         .groupBy(
             F.date_format("cohort_week", "yyyy-MM-dd").alias("cohort_week"),
             (F.datediff("active_week", "cohort_week") / 7)
@@ -2049,7 +2031,7 @@ def knn_serving_batch(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        centroids = ann_index._load_centroids(spark, index_table, tag)
+        centroids = ann_index._load_centroids(index_table, tag)
         if not centroids:
             raise FileNotFoundError(
                 f"knn_serving_batch: no centroid state under {index_table!r}"

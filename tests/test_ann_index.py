@@ -891,7 +891,6 @@ _GOOD = [[1.0, 2.0, 3.0, 4.0], [1.1, 2.0, 3.0, 4.1], [-3.0, 0.5, 1.0, 2.0]] * 4
 @pytest.mark.parametrize(
     "hostile,n_sub",
     [
-        ("null_vector", 2),
         ("null_element", 2),
         ("short_row", 2),
         ("long_row", 2),
@@ -902,15 +901,13 @@ _GOOD = [[1.0, 2.0, 3.0, 4.0], [1.1, 2.0, 3.0, 4.1], [-3.0, 0.5, 1.0, 2.0]] * 4
 def test_ivfpq_hostile_frames_take_the_distributed_branch(
     spark, monkeypatch, tmp_path, hostile, n_sub
 ):
-    """A frame the driver fit must not take — a NULL vector or element, a
-    ragged row, a dim the subspaces do not divide, no rows — skips it and
-    gives exactly the distributed build's result or error."""
+    """A frame the driver fit must not take — a NULL element, a ragged
+    row, a dim the subspaces do not divide, no rows — skips it and gives
+    exactly the distributed build's result or error."""
     from data_engineering_project_spark.operators import ann_index as ai
 
     vecs = [list(v) for v in _GOOD]
-    if hostile == "null_vector":
-        vecs[5] = None
-    elif hostile == "null_element":
+    if hostile == "null_element":
         vecs[5][2] = None
     elif hostile == "short_row":
         vecs[5] = vecs[5][:3]
@@ -936,3 +933,23 @@ def test_ivfpq_hostile_frames_take_the_distributed_branch(
     assert default == forced
     if default[0] == "built":
         assert default[1] == "distributed"
+
+
+def test_ivfpq_build_drops_null_vectors(spark, monkeypatch, tmp_path):
+    """A row whose vector is NULL has no cell and no codes: both branches
+    drop it at ingestion (as ``kmeans_assignments`` and ``ivfpq_topk``
+    do), so no query can return its id, and the driver fit no longer
+    defers to the distributed build for it."""
+    vecs = [list(v) for v in _GOOD]
+    vecs[5] = None
+    frame = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    (got_d, d), (got_x, x) = _build_both(
+        monkeypatch, frame, tmp_path, k_cells=2, n_sub=2, k_codes=2
+    )
+    assert (got_d, got_x) == ("driver", "distributed")
+    state = _index_state(spark, d)
+    assert state == _index_state(spark, x)
+    ids = [r[0] for r in state[""][0]]
+    assert 5 not in ids and len(ids) == 11

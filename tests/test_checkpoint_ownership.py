@@ -131,8 +131,8 @@ def test_iterative_operator_leaves_only_its_result_persisted(spark, op):
 
 @pytest.mark.parametrize(
     "op",
-    [_cc, _kcore, _cohort_writer],
-    ids=["connected_components", "kcore_peel", "upsert_cohort_state"],
+    [_cc, _kcore],
+    ids=["connected_components", "kcore_peel"],
 )
 def test_operator_never_frees_a_concurrent_checkpoint(spark, monkeypatch, op):
     """A checkpoint another caller makes while the operator's first

@@ -5,9 +5,11 @@ schema they already know.
 ``createDataFrame(list)`` for every shape the package builds, as a
 ``LocalTableScan``. Snapshot and state reads given their recorded schema,
 and the streaming state readers reading it from the parquet footer, must
-run no Spark job to build the frame (a schema-inference job each before),
-and an IVF-PQ query runs its two side-table reads and one probe
-scan — three jobs.
+run no Spark job to build the frame (a schema-inference job each before).
+Tables a spec constant bounds skip Spark altogether: the ANN side tables
+are written and read on the driver with no job, so an IVF-PQ query runs
+one job (its probe scan), and the cohort writer commits each micro-batch
+with one parquet write and no checkpoint.
 """
 
 from __future__ import annotations
@@ -156,9 +158,9 @@ def test_state_read_builds_its_frame_without_a_job(spark, tmp_path):
 
 def test_cohort_read_builds_its_frame_without_a_job(spark, tmp_path):
     """The state readers take the schema Spark recorded in the state's
-    parquet footer: building the cohort frame over its two state
-    components runs no schema-inference job; a missing state dir still
-    raises at read time."""
+    parquet footer: building the cohort frame over its state table runs
+    no schema-inference job; a missing state dir still raises at read
+    time."""
     from pyspark.errors import AnalysisException
 
     from data_engineering_project_spark.streaming.pipeline import (
@@ -184,9 +186,10 @@ def test_cohort_read_builds_its_frame_without_a_job(spark, tmp_path):
         read_cohort_retention(spark, str(tmp_path / "missing"))
 
 
-def test_ivfpq_query_runs_three_jobs(spark, tmp_path):
-    """Centroid side table, codebook side table, one scan of the probed
-    cells' files: three jobs, no schema inference, no per-cell read."""
+def test_ivfpq_query_runs_one_job(spark, tmp_path):
+    """The centroid and codebook side tables are read on the driver, so
+    the one scan of the probed cells' files is the query's only job: no
+    schema inference, no per-cell read."""
     from data_engineering_project_spark.operators.ann_index import (
         build_ivfpq_index,
         query_ivfpq_index,
@@ -203,7 +206,68 @@ def test_ivfpq_query_runs_three_jobs(spark, tmp_path):
     with _jobs(spark) as ids:
         hits = query_ivfpq_index(spark, table, rows[12][1], k=5, nprobe=2).collect()
     assert len(hits) == 5
-    assert len(ids) <= 3, sorted(ids)
+    assert len(ids) == 1, sorted(ids)
+
+
+def _executions(spark):
+    """The SQL executions the session has recorded so far."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    return list(conv.asJava(store.executionsList()))
+
+
+def test_side_table_write_and_read_run_no_job(spark, tmp_path):
+    """A spec-sized side table is written by pyarrow and read back on the
+    driver, tag included: no Spark job either way."""
+    table = str(tmp_path / "side")
+    rows = [(s, c, [float(s), -0.5 * c]) for s in range(4) for c in range(8)]
+    with _jobs(spark) as ids:
+        snap.write_local(rows, "sub int, code int, cvec array<double>", table, mode="overwrite")
+        snap.create_tag(table, "serving")
+        got = snap.read_local(table, tag="serving")
+    assert ids == []
+    assert [tuple(r.values()) for r in got.to_pylist()] == rows
+
+
+def test_cohort_writer_commits_once_without_a_checkpoint(spark, tmp_path, monkeypatch):
+    """On a non-empty state, one micro-batch is one parquet write (the
+    merged state, swapped in once) and no ``localCheckpoint``."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from data_engineering_project_spark.streaming.pipeline import (
+        upsert_cohort_state,
+    )
+
+    def _batch(rows):
+        return spark.createDataFrame(rows, "user_id bigint, ts timestamp")
+
+    write = upsert_cohort_state(str(tmp_path / "cohort"), time_col="ts")
+    write(_batch([(1, datetime.datetime(2024, 1, 1, 10, 0))]), 0)
+    checkpoints = []
+    real = ClassicDataFrame.localCheckpoint
+    monkeypatch.setattr(
+        ClassicDataFrame,
+        "localCheckpoint",
+        lambda self, *a, **k: checkpoints.append(1) or real(self, *a, **k),
+    )
+    before = {e.executionId() for e in _executions(spark)}
+    write(
+        _batch(
+            [
+                (1, datetime.datetime(2024, 1, 9, 10, 0)),
+                (2, datetime.datetime(2024, 1, 2, 10, 0)),
+            ]
+        ),
+        1,
+    )
+    writes = [
+        e
+        for e in _executions(spark)
+        if e.executionId() not in before
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    assert len(writes) == 1
+    assert checkpoints == []
 
 
 def test_driver_sized_ivfpq_build_runs_seven_jobs_and_no_python_stage(

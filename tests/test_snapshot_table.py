@@ -844,3 +844,45 @@ def test_read_pruned_keeps_the_table_schema(spark, table):
     pruned = st.read_pruned(spark, table, "k", 1, 1)
     assert pruned.columns == ["k", "a", "b"]
     assert sorted(tuple(r) for r in pruned.filter("k = 1").collect()) == [(1, "a", None)]
+
+
+def _read_both(spark, table, **selector):
+    """The table read by Spark and by the driver: equal schema and rows."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    local = st.read_local(table, **selector)
+    frame = st.read_table(spark, table, **selector)
+    assert from_arrow_schema(local.schema) == frame.schema
+    key = lambda r: r["k"]  # noqa: E731
+    assert sorted(local.to_pylist(), key=key) == sorted(
+        (r.asDict(recursive=True) for r in frame.collect()), key=key
+    )
+    return local
+
+
+def test_driver_written_table_reads_the_same_through_spark_and_the_driver(
+    spark, table
+):
+    """``write_local`` commits a table both readers agree on: the newest
+    version, a tag, a schema-evolved manifest (a file written before the
+    column was added reads it as NULL) and the survivors of ``vacuum``."""
+    schema = "k int, v string, xs array<double>"
+    st.write_local([(1, "a", [0.5, None]), (2, None, [])], schema, table, mode="overwrite")
+    st.create_tag(table, "first")
+    st.write_table(
+        spark.createDataFrame([(3, "c", [1.0], 30)], schema + ", n bigint"),
+        table,
+        mode="append",
+    )
+    st.write_local([(4, "d", None, 40)], schema + ", n bigint", table, mode="append")
+    evolved = _read_both(spark, table)
+    assert evolved.column_names == ["k", "v", "xs", "n"]
+    assert sorted(evolved.column("n").to_pylist(), key=str) == [30, 40, None, None]
+
+    st.write_local([(9, "z", [2.0], 90)], schema + ", n bigint", table, mode="overwrite")
+    removed = st.vacuum(table)
+    assert removed  # the evolved version's files expired; the tag's stayed
+    assert [r["k"] for r in _read_both(spark, table).to_pylist()] == [9]
+    pinned = _read_both(spark, table, tag="first")
+    assert pinned.column_names == ["k", "v", "xs"]
+    assert [r["k"] for r in pinned.to_pylist()] == [1, 2]

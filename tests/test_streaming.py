@@ -1413,9 +1413,11 @@ def test_streaming_cohort_retention_matches_batch_twin_and_heals_partial_crash(
     """upsert_cohort_state + read_cohort_retention: the streamed cohort
     grid must be BIT-IDENTICAL to the batch events_cohort_retention over
     the same events for any batch split, a replayed batch must be a no-op
-    (both state components merge idempotently — min and set-union, no
-    batch_id protocol), and a crash BETWEEN the two component swaps must
-    heal on replay rather than corrupt or double-count."""
+    (the one state table merges idempotently — min, no batch_id
+    protocol), and a crash INSIDE the batch's single state swap must heal
+    on replay rather than corrupt or double-count."""
+    import os
+
     from pyspark.sql import functions as F
 
     from data_engineering_project_spark.plans import catalog
@@ -1456,31 +1458,65 @@ def test_streaming_cohort_retention_matches_batch_twin_and_heals_partial_crash(
     )
     assert again == want
 
-    # partial-application crash: batch 2 (a time-travel slice re-sent as
-    # new data) dies AFTER the first_touch swap but BEFORE user_weeks —
-    # the replay must re-merge BOTH components to the same fixpoint
+    # crash inside the swap: batch 1's merged state is written and the
+    # old state moved aside, then the writer dies before the final rename
+    # — the replay must restore the old state and merge to the fixpoint
     shutil.rmtree(dirs["target"])
     early = ev.filter(F.col("ts") < cut)
     late = ev.filter(F.col("ts") >= cut)
     write(early, 0)
-    real_swap = pipeline._atomic_swap_write
-    calls = {"n": 0}
+    swaps = []
 
     def _dying_swap(merged, target_dir):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("killed between component swaps")
-        real_swap(merged, target_dir)
+        swaps.append(target_dir)
+        merged.write.parquet(target_dir + "_next")
+        os.rename(target_dir, target_dir + "_old")
+        raise RuntimeError("killed inside the state swap")
 
     monkeypatch.setattr(pipeline, "_atomic_swap_write", _dying_swap)
-    try:
+    with pytest.raises(RuntimeError, match="killed inside the state swap"):
         write(late, 1)
-    except RuntimeError:
-        pass
-    monkeypatch.setattr(pipeline, "_atomic_swap_write", real_swap)
-    # state is torn (first_touch ahead of user_weeks) but a replay heals
+    monkeypatch.undo()
+    assert len(swaps) == 1  # one swap per batch: no torn multi-table state
+    assert not os.path.exists(swaps[0])  # the live table is gone mid-swap
     write(late, 1)
     healed = sorted(
         tuple(r) for r in read_cohort_retention(spark, dirs["target"]).collect()
     )
     assert healed == want
+
+
+@pytest.mark.parametrize("first_touch", ["first_touch", "first_touch_old"])
+def test_cohort_state_refuses_the_old_two_component_layout(
+    spark, tmp_path, first_touch
+):
+    """A state dir written by the two-component writer (``first_touch/``
+    beside a ``user_weeks/`` without ``first_ts``; ``first_touch_old/``
+    when that writer died between its swap renames) would read as a NULL
+    first touch for every user: the writer and the reader refuse it,
+    naming the dir, and leave it as it was."""
+    import datetime
+    import os
+    import re
+
+    from data_engineering_project_spark.streaming.pipeline import (
+        read_cohort_retention,
+        upsert_cohort_state,
+    )
+
+    state = str(tmp_path / "cohort")
+    t = datetime.datetime(2024, 1, 1, 10, 0)
+    spark.createDataFrame([(1, t)], "user_id bigint, first_ts timestamp").write.parquet(
+        os.path.join(state, first_touch)
+    )
+    spark.createDataFrame([(1, t)], "user_id bigint, active_week timestamp").write.parquet(
+        os.path.join(state, "user_weeks")
+    )
+    before = sorted(os.listdir(state))
+    batch = spark.createDataFrame([(2, t)], "user_id bigint, ts timestamp")
+    refusal = re.escape(repr(state)) + ".*two-component"
+    with pytest.raises(ValueError, match=refusal):
+        upsert_cohort_state(state, time_col="ts")(batch, 0)
+    with pytest.raises(ValueError, match=refusal):
+        read_cohort_retention(spark, state)
+    assert sorted(os.listdir(state)) == before

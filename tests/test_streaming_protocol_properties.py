@@ -9,9 +9,10 @@ the protocol CONTRACTS over arbitrary schedules.
   what makes additive counters safe under replay — a broken replace
   shows up as double counting on the first redelivered example.
 
-- idempotent two-component state (upsert_cohort_state): same schedule
+- idempotent one-table state (upsert_cohort_state): same schedule
   freedom, same bit-identity against events_cohort_retention — here the
-  min/set-union merges carry the guarantee instead of batch_id keys.
+  min merge per (user, active week) carries the guarantee instead of
+  batch_id keys.
 """
 
 from __future__ import annotations
