@@ -432,7 +432,6 @@ def write_local(
     table: str,
     *,
     mode: str = "append",
-    stats_cols: Sequence[str] = (),
 ) -> Manifest:
     """:func:`write_table` for rows the driver holds (``rows``/``schema`` as
     in ``sources/tables.py:local_frame``): pyarrow writes them as one
@@ -447,7 +446,7 @@ def write_local(
         rel = os.path.join(_DATA_DIR, uuid.uuid4().hex[:12], "part-00000.parquet")
         os.makedirs(os.path.dirname(os.path.join(table, rel)))
         pq.write_table(arrow, os.path.join(table, rel))
-        return [_file_entry(table, rel, stats_cols)]
+        return [_file_entry(table, rel, ())]
 
     return _write_version(table, mode, struct, _write_file)
 
@@ -531,19 +530,13 @@ def read_table(
     return _read_files(spark, table, [f["path"] for f in m.files], m.schema)
 
 
-def read_local(
-    table: str,
-    *,
-    version: int | None = None,
-    tag: str | None = None,
-    as_of: float | None = None,
-):
-    """:func:`read_table` on the driver, as a ``pyarrow.Table``: the same
-    version selectors, rows and manifest schema (as Arrow types; a file
-    written before a column was added reads it as NULL), with no Spark job.
-    For tables a spec constant bounds; reads any table's files, whoever
-    wrote them."""
-    m = _selected_manifest(table, version, tag, as_of)
+def read_local(table: str, *, tag: str | None = None):
+    """:func:`read_table` on the driver, as a ``pyarrow.Table``: the newest
+    version or the one ``tag`` pins, with the same rows and manifest schema
+    (as Arrow types; a file written before a column was added reads it as
+    NULL), and no Spark job. For tables a spec constant bounds; reads any
+    table's files, whoever wrote them."""
+    m = _selected_manifest(table, None, tag, None)
     parts = [pq.ParquetFile(os.path.join(table, f["path"])).read() for f in m.files]
     if m.schema is None:
         return pa.concat_tables(parts, promote_options="default")
